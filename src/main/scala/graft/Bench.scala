@@ -161,6 +161,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    GraftExtensions.register(spark)
     // Warm the session once (parquet reader init, codegen of common
     // stages) so the first timed query doesn't absorb ~5s of one-time
     // JVM/janino startup that isn't the query's own cost. One tiny

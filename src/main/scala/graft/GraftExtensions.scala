@@ -146,10 +146,15 @@ object GraftExtensions {
       scalaUdfOf(graft.operators.TextOps.unigramSegmentUnkUdf, children)
     })
 
-  /** Register graft's SQL functions on an already-running session (the
-    * extensions path only applies when the session is first built). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+  /** Attach graft to an already-running session (the extensions path
+    * only applies when the session is first built): register its SQL
+    * functions and route `file://` I/O through the fork-free
+    * [[graft.io.LocalFs]]. Every main and the test session go through
+    * here. Idempotent. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     sqlFunctions.foreach { case (name, builder) =>
       org.apache.spark.sql.graftglue.registerFunction(spark, name, builder)
     }
+    graft.io.LocalFs.install(spark.sparkContext.hadoopConfiguration)
+  }
 }

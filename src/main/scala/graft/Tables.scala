@@ -52,10 +52,16 @@ object Tables {
     * r17 ADVICE item 3). Overridable per session for other deployments;
     * the default is deliberately far below one scan split so every
     * kernel-heavy table (documents/embeddings, whose COMPUTE per byte —
-    * not byte count — is what the fan-out parallelizes) keeps fanning. */
+    * not byte count — is what the fan-out parallelizes) keeps fanning.
+    * A value that is not a non-negative whole number of bytes fails the
+    * load with the key and the value named. */
   private def fanMinBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.fanoutMinBytes")
-      .map(_.toLong).getOrElse(65536L)
+    spark.conf.getOption(FanoutMinBytesKey).map { v =>
+      v.trim.toLongOption.filter(_ >= 0L).getOrElse(throw new IllegalArgumentException(
+        s"$FanoutMinBytesKey must be a non-negative number of bytes, got '$v'"))
+    }.getOrElse(65536L)
+
+  private val FanoutMinBytesKey = "spark.graft.fanoutMinBytes"
 
   /** Input-skew repair (optimization guide §2.5: "one huge unsplittable
     * file ... repartition immediately after the read"; §6 input split
@@ -77,8 +83,9 @@ object Tables {
   private def fanout(spark: SparkSession, dir: String, name: String,
                      df: DataFrame): DataFrame = {
     val cores = spark.sparkContext.defaultParallelism
+    val minBytes = fanMinBytes(spark) // parsed on every load, not only when it decides
     val (splits, bytes) = estimatedSplits(spark, s"$dir/$name.parquet")
-    if (splits < cores && bytes >= fanMinBytes(spark))
+    if (splits < cores && bytes >= minBytes)
       df.repartition(cores)
     else df
   }

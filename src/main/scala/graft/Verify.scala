@@ -14,6 +14,7 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    GraftExtensions.register(spark) // the parquet dumps go through graft.io.LocalFs
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated prefix filter (e.g. "q20,q32,s03c") for
     // scale-assurance spot checks at SFs where the full quadratic-oracle

@@ -15,6 +15,14 @@ import org.apache.spark.sql.functions._
   * K2/K3 — batched RPC publisher (retrieval.py:123-169): per-partition
   * client (the Beam start_bundle amortization) + bounded batches. The
   * transport is pluggable; tests inject an in-memory publisher.
+  *
+  * Cost model for K1: a partitioned write's cost grows with the number
+  * of output files, one per task per non-empty partition, more than
+  * with its bytes: each file is a task-attempt file, its `.crc`, their
+  * directories and a commit rename. On `file://` that is metadata work
+  * through [[graft.io.LocalFs]], which sessions get from
+  * [[graft.GraftExtensions.register]]; stock Hadoop without `libhadoop`
+  * also forks a `chmod` process for every file and directory.
   */
 object Sinks {
 

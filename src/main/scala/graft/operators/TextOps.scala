@@ -990,13 +990,14 @@ object TextOps {
     * OOM). The memo is task-lifetime state for a PURE function of
     * (word, pinned model literal) — never a result keyed on the input
     * dir, and it dies with the task. Tokenization is
-    * `text.trim.split("\\s+", -1)` — Pattern-identical to the column
-    * form `split(trim(text), "\\s+")` (Spark's split is Java-regex with
-    * limit -1), so n_words is bit-equal to the exploded count. */
+    * `trimSpaces(text).split("\\s+", -1)` — identical to the column form
+    * `split(trim(text), "\\s+")` (Spark's `trim` strips only ' ', and its
+    * split is Java-regex with limit -1), so n_words is bit-equal to the
+    * exploded count, tabs and newlines at the ends included. */
   private def encodeCountsUdf(nSubOf: String => Long) = {
     val memo = new java.util.HashMap[String, java.lang.Long]()
     udf { text: String =>
-      val toks = text.trim.split("\\s+", -1)
+      val toks = trimSpaces(text).split("\\s+", -1)
       var nw = 0L
       var ns = 0L
       var i = 0
@@ -1013,6 +1014,16 @@ object TextOps {
       }
       (nw, ns)
     }
+  }
+
+  /** Spark SQL `trim`: strips ' ' only, where `String.trim` strips every
+    * char <= U+0020 (tabs, CR, LF too). */
+  private def trimSpaces(s: String): String = {
+    var b = 0
+    var e = s.length
+    while (b < e && s.charAt(b) == ' ') b += 1
+    while (e > b && s.charAt(e - 1) == ' ') e -= 1
+    s.substring(b, e)
   }
 
   /** Leftmost-greedy application of a rank-ordered merge list to one

@@ -33,6 +33,17 @@ import graft.operators.{Normalize, Sinks}
   * (`maxFilesPerTrigger` bounds a batch), the transform is a narrow
   * projection (no shuffle anywhere), and the dt/hr layout gives
   * hive-style partition pruning to every downstream reader.
+  *
+  * Cost model: on small inputs a micro-batch costs its fixed commit
+  * work, not its bytes — an offset write-ahead-log entry and a commit
+  * log entry (each a temp file plus a `FileContext` rename, with `.crc`
+  * siblings), a `_spark_metadata` entry, and one task-attempt file plus
+  * commit rename per non-empty dt/hr partition. That is filesystem
+  * metadata work only because the session went through
+  * [[graft.GraftExtensions.register]]: on a host without `libhadoop`,
+  * stock Hadoop forks `chmod` for every file and directory created and
+  * `readlink` for both ends of every checkpoint rename (see
+  * [[graft.io.LocalFs]]).
   */
 object NormalizationJob {
 

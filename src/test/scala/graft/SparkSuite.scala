@@ -22,6 +22,8 @@ object SparkSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // the same attach every main does, so specs run the shipped I/O path
+    GraftExtensions.register(s)
     s
   }
 }

@@ -11,7 +11,6 @@ import org.apache.spark.sql.DataFrame
 class SqlParitySpec extends SparkSuite {
 
   Tables.registerAll(spark, sf)
-  GraftExtensions.register(spark) // graft_dot on the live session
   graft.plans.TopKPerGroup.register(spark)
 
   /** Order-free frame fingerprint, columns sorted by name like the
