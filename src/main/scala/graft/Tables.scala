@@ -1,49 +1,103 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Warehouse table access. Tables are hive-less parquet files laid out as
-  * `dir/<name>.parquet` (see /root/repo/TESTDATA.md). Reading through
+  * `dir/<name>.parquet` (see TESTDATA.md). Reading through
   * `spark.read.parquet` keeps the scan columnar + vectorized and lets
   * Catalyst push filters and prune columns down to the parquet reader —
   * the property we rely on for the 100 TB design point.
+  *
+  * Cost model of one [[t]] load, all on the driver and with no Spark
+  * job: one walk of the table path, one parquet footer read (the
+  * schema, Parquet being self-describing), and Spark's own resolution
+  * of the file source, which lists the path again. A plain
+  * `spark.read.parquet(path)` would also launch a schema-inference job
+  * to read that one footer; [[t]] passes the schema it read instead.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Estimated (scan-task count, total data bytes) for a parquet path,
-    * mirroring Spark's own split sizing (`FilePartition.maxSplitBytes`):
-    * maxSplit = min(maxPartitionBytes, max(openCostInBytes,
-    * (Σ(len + openCost)) / defaultParallelism)), splits = Σ ceil(len /
-    * maxSplit). The r17 form modeled only maxPartitionBytes, so a
-    * splittable file Spark would already scan with >= cores tasks could
-    * still trigger a redundant full-table shuffle (r17 ADVICE). Pure
-    * file metadata (one local listStatus), no data read. */
+  /** Every leaf file a load of `path` sees, sorted by path: the names
+    * Spark's file index lists (data files plus the `_metadata` and
+    * `_common_metadata` summaries; never `_SUCCESS`, `.crc` or
+    * `._COPYING_` files), found by one local walk. The split estimate
+    * and the schema footer are both chosen from it. Empty when the
+    * path does not exist. */
+  private def leafFiles(fs: FileSystem, path: Path): Seq[FileStatus] = {
+    def listed(n: String): Boolean =
+      (isData(n) && !n.endsWith("._COPYING_")) ||
+        n.startsWith("_common_metadata") || n.startsWith("_metadata")
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory)
+        fs.listStatus(st.getPath).toSeq.filter(f => listed(f.getPath.getName))
+          .flatMap(walk)
+      else Seq(st)
+    try walk(fs.getFileStatus(path)).sortBy(_.getPath.toString)
+    catch { case _: java.io.FileNotFoundException => Nil }
+  }
+
+  /** Whether a scan reads a leaf of this name (Spark's `isDataPath`):
+    * not a summary, marker or hidden file. */
+  private def isData(name: String): Boolean =
+    !((name.startsWith("_") && !name.contains("=")) || name.startsWith("."))
+
+  /** The schema Spark's own inference gives the table, read from one
+    * footer on the driver. Inference without `mergeSchema` touches one
+    * file: `_common_metadata`, else `_metadata`, else the first data
+    * file (`ParquetUtils.inferSchema`). It converts that footer with the
+    * converter `ParquetFileFormat.mergeSchemasInParallel` builds from
+    * the same five session flags, but inside a Spark job, one per load
+    * even for a single file. None when there is no file to read. */
+  private def footerSchema(spark: SparkSession, conf: Configuration,
+                           leaves: Seq[FileStatus]): Option[StructType] = {
+    def named(n: String) = leaves.find(_.getPath.getName == n)
+    named("_common_metadata").orElse(named("_metadata"))
+      .orElse(leaves.find(f => isData(f.getPath.getName))).map { f =>
+        val sql = spark.sessionState.conf
+        val converter = new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = sql.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+          nanosAsLong = sql.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation =
+            sql.parquetReaderRespectUnknownTypeAnnotation)
+        val meta = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, conf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(
+          new Footer(f.getPath, meta), converter)
+      }
+  }
+
+  /** Estimated (scan-task count, total data bytes) of a table's data
+    * files, mirroring Spark's own split sizing
+    * (`FilePartition.maxSplitBytes`): maxSplit = min(maxPartitionBytes,
+    * max(openCostInBytes, (Σ(len + openCost)) / defaultParallelism)),
+    * splits = Σ ceil(len / maxSplit). The r17 form modeled only
+    * maxPartitionBytes, so a splittable file Spark would already scan
+    * with >= cores tasks could still trigger a redundant full-table
+    * shuffle (r17 ADVICE). Pure file metadata, no data read. */
   private def estimatedSplits(spark: SparkSession,
-                              path: String): (Long, Long) = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+                              leaves: Seq[FileStatus]): (Long, Long) = {
     val maxPB = spark.sessionState.conf.filesMaxPartitionBytes.max(1L)
     val openCost = spark.sessionState.conf.filesOpenCostInBytes.max(1L)
-    def walk(st: org.apache.hadoop.fs.FileStatus): Seq[Long] =
-      if (st.isDirectory)
-        fs.listStatus(st.getPath).toSeq
-          .filterNot(f => { val n = f.getPath.getName
-            n.startsWith("_") || n.startsWith(".") })
-          .flatMap(walk)
-      else Seq(st.getLen)
-    try {
-      val lens = walk(fs.getFileStatus(hPath))
-      val bytes = lens.sum
-      val perCore = lens.map(_ + openCost).sum /
-        spark.sparkContext.defaultParallelism.max(1)
-      val maxSplit = math.min(maxPB, math.max(openCost, perCore)).max(1L)
-      (lens.map(l => (l + maxSplit - 1) / maxSplit).sum, bytes)
-    } catch {
-      case scala.util.control.NonFatal(_) => (Long.MaxValue, Long.MaxValue)
-    }
+    val lens = leaves.filter(f => isData(f.getPath.getName)).map(_.getLen)
+    val bytes = lens.sum
+    val perCore = lens.map(_ + openCost).sum /
+      spark.sparkContext.defaultParallelism.max(1)
+    val maxSplit = math.min(maxPB, math.max(openCost, perCore)).max(1L)
+    (lens.map(l => (l + maxSplit - 1) / maxSplit).sum, bytes)
   }
 
   /** Fan-out floor: a table smaller than this many bytes never fans out
@@ -80,11 +134,11 @@ object Tables {
     * Callers whose 100 TB law is "the payload/text never crosses an
     * exchange" (m-family media, x27 export) pass `fan = false` and
     * keep their scan-local plans. */
-  private def fanout(spark: SparkSession, dir: String, name: String,
+  private def fanout(spark: SparkSession, leaves: Seq[FileStatus],
                      df: DataFrame): DataFrame = {
     val cores = spark.sparkContext.defaultParallelism
     val minBytes = fanMinBytes(spark) // parsed on every load, not only when it decides
-    val (splits, bytes) = estimatedSplits(spark, s"$dir/$name.parquet")
+    val (splits, bytes) = estimatedSplits(spark, leaves)
     if (splits < cores && bytes >= minBytes)
       df.repartition(cores)
     else df
@@ -104,19 +158,29 @@ object Tables {
     // shifted timestamps.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
-    val normalized = df.schema.fields.foldLeft(df) { (acc, f) =>
-      if (f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType)
-        acc.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
-          org.apache.spark.sql.functions.expr("ts div 1000")))
-      else if (f.name == "ts" &&
-          f.dataType == org.apache.spark.sql.types.TimestampNTZType)
-        acc.withColumn("ts", org.apache.spark.sql.functions.col("ts")
-          .cast(org.apache.spark.sql.types.TimestampType))
+    val path = new Path(s"$dir/$name.parquet")
+    val conf = spark.sessionState.newHadoopConf()
+    val leaves = leafFiles(path.getFileSystem(conf), path)
+    val df = footerSchema(spark, conf, leaves) match {
+      case Some(schema) => spark.read.schema(schema)
+        .option("mergeSchema", "false").parquet(path.toString)
+      // nothing to read a schema from: Spark's reader raises its own
+      // AnalysisException (PATH_NOT_FOUND, UNABLE_TO_INFER_SCHEMA)
+      case None => spark.read.parquet(path.toString)
+    }
+    val normalized = normalizeTs(df)
+    if (fan) fanout(spark, leaves, normalized) else normalized
+  }
+
+  /** The events.ts normalization [[t]] applies to a raw read. */
+  private[graft] def normalizeTs(df: DataFrame): DataFrame =
+    df.schema.fields.foldLeft(df) { (acc, f) =>
+      if (f.name == "ts" && f.dataType == LongType)
+        acc.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      else if (f.name == "ts" && f.dataType == TimestampNTZType)
+        acc.withColumn("ts", col("ts").cast(TimestampType))
       else acc
     }
-    if (fan) fanout(spark, dir, name, normalized) else normalized
-  }
 
   /** Register every table as a temp view so `spark.sql(...)` works too. */
   def registerAll(spark: SparkSession, dir: String): Unit =

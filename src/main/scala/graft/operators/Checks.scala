@@ -147,15 +147,21 @@ object Checks {
     * r18 restructure (guide §1.2/§2.4): ONE scan per CHILD table
     * instead of one per edge — lineitem's three edges read its three
     * key columns in a single pass, each parent's distinct key set
-    * broadcast-LEFT-joins in sequence (row multiplicity provably
-    * unchanged: the parent side is distinct), and one aggregate
+    * LEFT-joins in sequence (row multiplicity provably unchanged: the
+    * parent side is distinct), and one aggregate
     * computes every edge's (n_child, n_orphans) pair, unpivoted to the
     * per-edge report rows (the v03 explode pattern). Per-edge
     * semantics are fkOrphans' exactly: n_child counts non-null child
     * keys, an orphan is a non-null key with no parent hit. The r17
     * plan ran 7 independent scan→join→agg branches (42 exchanges,
     * 47 AQE stage-jobs measured); still only key columns are ever
-    * scanned — a fact table's payload never moves. */
+    * scanned — a fact table's payload never moves. No join is hinted:
+    * the planner's size gate (`autoBroadcastJoinThreshold`, over the
+    * key set's estimated size, then AQE's over its measured size)
+    * broadcasts a dimension parent and shuffles one slim key column
+    * for a fact-scale one (lineitem→orders at large SF), as fkOrphans
+    * promises. A forced broadcast would ship a fact table's whole key
+    * set to every executor. */
   def referentialIntegrity(s: SparkSession, dir: String): DataFrame =
     warehouseEdges.groupBy(_.child).toSeq.sortBy(_._1).map {
       case (child, edges) =>
@@ -165,7 +171,7 @@ object Checks {
           val pk = t(s, dir, e.parent)
             .select(col(e.parentCol).as(s"k_$i")).distinct()
             .withColumn(s"hit_$i", lit(1))
-          df = df.join(broadcast(pk), col(e.childCol) === col(s"k_$i"), "left")
+          df = df.join(pk, col(e.childCol) === col(s"k_$i"), "left")
         }
         val aggs = edges.zipWithIndex.flatMap { case (e, i) => Seq(
           count(when(col(e.childCol).isNotNull, 1)).as(s"n_child_$i"),

@@ -349,10 +349,11 @@ object Similarity {
                      nEntries: Int = S18NEntries,
                      bucketCap: Int = DefaultBucketCap): DataFrame = {
     val all = emb(s, dir)
-    annGraphInsertFrames(s, dir,
+    insertSearch(s, dir,
       all.filter(col("vec_id") < splitId)
         .select(col("vec_id").as("q_id"), col("v").as("qv"),
           col("nrm").as("qn")),
+      maxQueries = splitId,
       splitId, nTables, nPlanes, m, beam, hops, nEntries, bucketCap)
   }
 
@@ -372,7 +373,17 @@ object Similarity {
                            m: Int = GraphM,
                            beam: Option[Int] = None, hops: Option[Int] = None,
                            nEntries: Int = S18NEntries,
-                           bucketCap: Int = DefaultBucketCap): DataFrame = {
+                           bucketCap: Int = DefaultBucketCap): DataFrame =
+    insertSearch(s, dir, queries, maxQueries = Long.MaxValue,
+      splitId, nTables, nPlanes, m, beam, hops, nEntries, bucketCap)
+
+  /** [[annGraphInsertFrames]] for a query set the caller knows holds at
+    * most `maxQueries` rows (Long.MaxValue: unknown). */
+  private def insertSearch(s: SparkSession, dir: String, queries: DataFrame,
+                           maxQueries: Long, splitId: Long, nTables: Int,
+                           nPlanes: Option[Int], m: Int, beam: Option[Int],
+                           hops: Option[Int], nEntries: Int,
+                           bucketCap: Int): DataFrame = {
     val all = emb(s, dir)
     val old = all.filter(col("vec_id") >= splitId)
     val n = memoCount(s"$dir#ge$splitId")(
@@ -387,7 +398,8 @@ object Similarity {
     beamSearchFrames(all, topMGraph(scored, m), queries,
       old.filter(col("vec_id") < splitId + nEntries)
         .select(col("vec_id").as("n_id")),
-      beam.getOrElse(autoBeam(n)), hops.getOrElse(autoHops(n)), k = m)
+      beam.getOrElse(autoBeam(n)), hops.getOrElse(autoHops(n)), k = m,
+      maxQueries)
   }
 
   /** Adapt a raw (vec_id, embedding) frame — e.g. a streaming
@@ -447,7 +459,8 @@ object Similarity {
           col("nrm").as("qn")),
       old.filter(col("vec_id") < splitId + nEntries)
         .select(col("vec_id").as("n_id")),
-      beam.getOrElse(autoBeam(n)), hops.getOrElse(autoHops(n)), k = m)
+      beam.getOrElse(autoBeam(n)), hops.getOrElse(autoHops(n)), k = m,
+      maxQueries = splitId)
     val incoming = newEdges
       .select(col("n_id").as("src"), col("q_id").as("dst"), col("cos"))
     val affected = incoming.select("src").distinct()
@@ -532,8 +545,11 @@ object Similarity {
     * the driver merge/rank only COMPARES already-rounded doubles —
     * replicating Spark's nanSafeCompareDoubles (-0.0 == 0.0) with
     * integer tie-breaks — so ranks and values are bit-identical to the
-    * frame form (the insert family s18/s20, whose query set is the
-    * BATCH and can outgrow a driver, keeps [[beamSearchFrames]]). */
+    * frame form. The insert family s18/s20 enters through
+    * [[beamSearchFrames]], whose query set is the BATCH: at or under
+    * [[BeamDriverMaxQueries]] it runs here on the driver too (the
+    * s18/s20 batch of 100 does), and only a larger batch keeps the
+    * distributed row-frame loop. */
   private def beamSearchDriver(corpus: DataFrame, graph: DataFrame,
                                queries: DataFrame, entries: DataFrame,
                                beam: Int, hops: Int, k: Int): DataFrame = {
@@ -602,15 +618,20 @@ object Similarity {
     * union-find finisher (driver state ≤ bound·(ne + hops·beam·m)
     * entries ≈ a few MB at the bound; the s18-class insert batch is
     * 100 here). A mega-batch beyond the bound keeps the distributed
-    * row-frame loop below. Decided from ONE limit(bound+1) probe of
-    * the query-id column, so the gate itself is metadata-cheap. */
+    * row-frame loop below. A caller that knows its query set holds at
+    * most `maxQueries` rows passes that bound (s18/s20: `vec_id <
+    * splitId` over the non-negative ids holds at most splitId rows);
+    * otherwise ONE limit(bound+1) probe job of the query-id column
+    * decides. */
   private val BeamDriverMaxQueries = 10000
 
   private def beamSearchFrames(corpus: DataFrame, graph: DataFrame,
                                queries: DataFrame, entries: DataFrame,
-                               beam: Int, hops: Int, k: Int): DataFrame = {
-    val probe = queries.select("q_id").limit(BeamDriverMaxQueries + 1).collect()
-    if (probe.length <= BeamDriverMaxQueries)
+                               beam: Int, hops: Int, k: Int,
+                               maxQueries: Long): DataFrame = {
+    if (maxQueries <= BeamDriverMaxQueries ||
+        queries.select("q_id").limit(BeamDriverMaxQueries + 1).collect()
+          .length <= BeamDriverMaxQueries)
       return beamSearchDriver(corpus, graph, queries, entries, beam, hops, k)
     def score(cand: DataFrame): DataFrame =
       cand.join(corpus.withColumnRenamed("vec_id", "n_id"), Seq("n_id"))

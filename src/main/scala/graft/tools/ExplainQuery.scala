@@ -17,6 +17,7 @@ object ExplainQuery {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    graft.GraftExtensions.register(spark) // SQL functions + fork-free file:// I/O
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r17"))

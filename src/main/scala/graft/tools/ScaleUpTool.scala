@@ -46,6 +46,7 @@ object ScaleUpTool {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.GraftExtensions.register(spark) // SQL functions + fork-free file:// I/O
 
     val copies = spark.range(factor).select(col("id").cast("int").as("copy"))
     def rep(name: String, keyCols: Seq[String])

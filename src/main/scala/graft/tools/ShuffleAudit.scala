@@ -113,6 +113,7 @@ object ShuffleAudit {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    graft.GraftExtensions.register(spark) // SQL functions + fork-free file:// I/O
     // spark.driver.memory is inert in local mode (the JVM is already
     // up — r15 ADVICE); the heap must come from sbt -mem / JAVA_OPTS.
     // Print what the audit actually ran with so spill numbers are

@@ -43,12 +43,15 @@ class PlanGateSpec extends SparkSuite {
     * execution AQE reports only the initial plan. */
   private def finalPlan(df: DataFrame): Seq[SparkPlan] = {
     df.count()
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => p +: flatten(a.executedPlan)
-      case q: QueryStageExec => p +: flatten(q.plan)
-      case _ => p +: p.children.flatMap(flatten)
-    }
-    flatten(df.queryExecution.executedPlan)
+    finalPlanOf(df.queryExecution.executedPlan)
+  }
+
+  /** `p` and everything under it, through adaptive wrappers and
+    * materialized query stages. */
+  private def finalPlanOf(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => p +: finalPlanOf(a.executedPlan)
+    case q: QueryStageExec => p +: finalPlanOf(q.plan)
+    case _ => p +: p.children.flatMap(finalPlanOf)
   }
 
   private def noQuadraticJoins(plan: Seq[SparkPlan]): Boolean =
@@ -350,26 +353,63 @@ class PlanGateSpec extends SparkSuite {
     }
   }
 
-  test("v02 referential integrity: every parent-key side joins BROADCAST, " +
-      "and only key columns are scanned") {
-    // each FK edge distinct's the parent keys then LEFT-joins the
-    // child key column; the parents are dimension-sized (largest:
-    // orders' key set) so all seven must broadcast at any tested SF —
-    // and no scan may read more than the key column (slim-key claim)
-    val df = graft.operators.Checks.referentialIntegrity(spark, sf)
-    val plan = finalPlan(df)
-    assert(broadcastJoins(plan) >= graft.operators.Checks.warehouseEdges.length,
-      s"expected >=7 broadcast edge joins, saw ${broadcastJoins(plan)}")
-    assert(noQuadraticJoins(plan), "v02 degraded to sort-merge/cartesian")
+  test("v02 referential integrity: a parent key set broadcasts by its " +
+      "estimated size, a fact-scale one shuffles slim, and only key columns are scanned") {
+    // each FK edge distinct's the parent keys then LEFT-joins the child
+    // key column, with no broadcast hint: the planner's size gate picks
+    // the join. At test SF every parent key set (largest: orders') is
+    // under the broadcast threshold, so all seven broadcast.
+    import graft.operators.Checks
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val keyCols = Checks.warehouseEdges.flatMap(e => Seq(e.childCol, e.parentCol)).toSet
     // slim-key claim, r18 form: a child table is scanned ONCE for ALL
     // its edges, so a scan may read several KEY columns (lineitem: 3)
     // — but never a column outside the declared FK key set
-    val keyCols = graft.operators.Checks.warehouseEdges
-      .flatMap(e => Seq(e.childCol, e.parentCol)).toSet
-    val wideScan = plan.collect { case s: FileSourceScanExec => s }
-      .find(_.schema.fields.exists(f => !keyCols.contains(f.name)))
-    assert(wideScan.isEmpty,
-      s"v02 scan reads beyond the FK key columns: ${wideScan.map(_.schema)}")
+    def assertSlimScans(plan: Seq[SparkPlan]): Unit = {
+      val wideScan = plan.collect { case s: FileSourceScanExec => s }
+        .find(_.schema.fields.exists(f => !keyCols.contains(f.name)))
+      assert(wideScan.isEmpty,
+        s"v02 scan reads beyond the FK key columns: ${wideScan.map(_.schema)}")
+    }
+    val plan = finalPlan(Checks.referentialIntegrity(spark, sf))
+    assert(broadcastJoins(plan) >= Checks.warehouseEdges.length,
+      s"expected >=7 broadcast edge joins, saw ${broadcastJoins(plan)}")
+    assert(noQuadraticJoins(plan), "v02 degraded to sort-merge/cartesian")
+    assertSlimScans(plan)
+
+    // a fact-scale parent: lower the threshold under orders' estimated
+    // key-set size (the lineitem->orders fact-fact edge) but over every
+    // other parent's. That edge alone must shuffle, and its shuffles
+    // carry key columns only, the orders side exactly one.
+    def keySetBytes(e: Checks.FkEdge): BigInt =
+      graft.Tables.t(spark, sf, e.parent).select(col(e.parentCol)).distinct()
+        .queryExecution.optimizedPlan.stats.sizeInBytes
+    val (fact, dims) = Checks.warehouseEdges.partition(_.parent == "orders")
+    val threshold = keySetBytes(fact.head) - 1
+    assert(dims.forall(keySetBytes(_) < threshold),
+      s"a dimension key set is not smaller than orders': ${dims.map(keySetBytes)}")
+    val confs = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val prev = confs.map(k => k -> spark.conf.getOption(k))
+    try {
+      confs.foreach(spark.conf.set(_, threshold.toString))
+      val lowered = finalPlan(Checks.referentialIntegrity(spark, sf))
+      val smj = lowered.collect { case j: SortMergeJoinExec => j }
+      assert(smj.map(_.leftKeys.map(_.references.map(_.name).mkString)) ==
+        Seq(Seq("l_orderkey")), s"expected only lineitem->orders to shuffle: $smj")
+      assert(broadcastJoins(lowered) == dims.length)
+      def shuffled(side: SparkPlan): Seq[Seq[String]] =
+        finalPlanOf(side).collect { case x: ShuffleExchangeExec => x.output.map(_.name) }
+      val (childSide, parentSide) = (shuffled(smj.head.left), shuffled(smj.head.right))
+      assert(childSide.nonEmpty && childSide.flatten.forall(keyCols),
+        s"lineitem side shuffles beyond its key columns: $childSide")
+      assert(parentSide.nonEmpty && parentSide.forall(_.length == 1),
+        s"orders side shuffles more than one slim column: $parentSide")
+      assertSlimScans(lowered)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   // ---- scan pushdown / pruning --------------------------------------

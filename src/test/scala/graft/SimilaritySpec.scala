@@ -615,6 +615,34 @@ class SimilaritySpec extends SparkSuite {
       "no batch vector entered any neighbor list - prune untested")
   }
 
+  test("s18/s20 skip the beam-search size probe; an explicit query frame keeps it") {
+    // the probe is the one collect of a LIMIT over the bare q_id column
+    // (the driver search collects q_id without a limit)
+    def probes(build: => Unit): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val l = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                      ns: Long): Unit = qe.analyzed match {
+          case lim: org.apache.spark.sql.catalyst.plans.logical.GlobalLimit
+              if lim.output.map(_.name) == Seq("q_id") => n.incrementAndGet()
+          case _ =>
+        }
+        def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                      e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      try { build; org.apache.spark.sql.graftglue.drainListenerBus(spark) }
+      finally spark.listenerManager.unregister(l)
+      n.get
+    }
+    assert(probes(Similarity.annGraphInsert(spark, sf).collect()) == 0)
+    assert(probes(Similarity.annGraphInsertRecip(spark, sf).collect()) == 0)
+    // a streamed micro-batch has no known bound: one probe decides
+    val batch = Similarity.annGraphInsertQueries(Tables.t(spark, sf, "embeddings")
+      .filter(col("vec_id") < Similarity.S18SplitId))
+    assert(probes(Similarity.annGraphInsertFrames(spark, sf, batch).collect()) == 1)
+  }
+
   test("s14 semdedup pairs are an exact-cosine subset; clusters refine exact") {
     val exact = Similarity.cosinePairs(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
