@@ -84,9 +84,9 @@ object Bench {
     * all columns and any left-join branch that can't change the row
     * count), the noop write materializes EVERY output column of EVERY
     * row — the cost a user actually pays for the result — and discards
-    * them at the sink. Same honesty contract as SumProbe's
-    * checksum-over-all-columns, without the extra hash work, and
-    * type-agnostic (checksum xxhash64 rejects MapType columns). */
+    * them at the sink. Same honesty contract as a checksum over all
+    * columns, without the extra hash work, and type-agnostic (xxhash64
+    * rejects MapType columns). */
   def drive(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
 
@@ -150,18 +150,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_results.json")
     val histPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY", "bench_history.jsonl"))
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val spark = LocalSession()
     // Warm the session once (parquet reader init, codegen of common
     // stages) so the first timed query doesn't absorb ~5s of one-time
     // JVM/janino startup that isn't the query's own cost. One tiny

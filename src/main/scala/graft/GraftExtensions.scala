@@ -147,14 +147,16 @@ object GraftExtensions {
     })
 
   /** Attach graft to an already-running session (the extensions path
-    * only applies when the session is first built): register its SQL
-    * functions and route `file://` I/O through the fork-free
-    * [[graft.io.LocalFs]]. Every main and the test session go through
-    * here. Idempotent. */
+    * only applies when the session is first built): register the same
+    * [[sqlFunctions]] the extension class injects, install the
+    * [[graft.plans.TopKStrategy]] planner strategy, and route `file://`
+    * I/O through the fork-free [[graft.io.LocalFs]]. [[LocalSession]]
+    * calls it for every main and the spec suite. Idempotent. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     sqlFunctions.foreach { case (name, builder) =>
       org.apache.spark.sql.graftglue.registerFunction(spark, name, builder)
     }
+    graft.plans.TopKPerGroup.register(spark)
     graft.io.LocalFs.install(spark.sparkContext.hadoopConfiguration)
   }
 }

@@ -158,18 +158,31 @@ object Tables {
     // shifted timestamps.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val path = new Path(s"$dir/$name.parquet")
-    val conf = spark.sessionState.newHadoopConf()
-    val leaves = leafFiles(path.getFileSystem(conf), path)
-    val df = footerSchema(spark, conf, leaves) match {
-      case Some(schema) => spark.read.schema(schema)
-        .option("mergeSchema", "false").parquet(path.toString)
-      // nothing to read a schema from: Spark's reader raises its own
-      // AnalysisException (PATH_NOT_FOUND, UNABLE_TO_INFER_SCHEMA)
-      case None => spark.read.parquet(path.toString)
-    }
+    val (df, leaves) = read(spark, s"$dir/$name.parquet")
     val normalized = normalizeTs(df)
     if (fan) fanout(spark, leaves, normalized) else normalized
+  }
+
+  /** Load any parquet path (a file or a directory, e.g. a saved model)
+    * the way [[t]] loads a table, with its schema read from one footer
+    * on the driver and no Spark job, but without [[t]]'s ts
+    * normalization and fan-out. */
+  def parquet(spark: SparkSession, path: String): DataFrame = read(spark, path)._1
+
+  /** The footer-schema read behind [[t]] and [[parquet]], with the leaf
+    * files it listed. */
+  private def read(spark: SparkSession, path: String): (DataFrame, Seq[FileStatus]) = {
+    val p = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val leaves = leafFiles(p.getFileSystem(conf), p)
+    val df = footerSchema(spark, conf, leaves) match {
+      case Some(schema) => spark.read.schema(schema)
+        .option("mergeSchema", "false").parquet(path)
+      // nothing to read a schema from: Spark's reader raises its own
+      // AnalysisException (PATH_NOT_FOUND, UNABLE_TO_INFER_SCHEMA)
+      case None => spark.read.parquet(path)
+    }
+    (df, leaves)
   }
 
   /** The events.ts normalization [[t]] applies to a raw read. */

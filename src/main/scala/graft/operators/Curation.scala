@@ -346,7 +346,7 @@ object Curation {
 
   /** Load a persisted quality model (inverse of [[saveQualityModel]]). */
   def loadQualityModel(s: SparkSession, path: String): Array[Long] = {
-    val rows = s.read.parquet(path).select("f", "w_micro").collect()
+    val rows = graft.Tables.parquet(s, path).select("f", "w_micro").collect()
     require(rows.length == 256, s"expected 256 model rows, got ${rows.length}")
     val w = new Array[Long](256)
     rows.foreach(r => w(r.getAs[Int]("f")) = r.getAs[Long]("w_micro"))

@@ -51,7 +51,7 @@ object Ingest {
   def readWatermark(spark: SparkSession, stateDir: String,
                     default: String = "2024-09-01 00:00:00"): String =
     try {
-      val rows = spark.read.parquet(stateDir)
+      val rows = graft.Tables.parquet(spark, stateDir)
         .agg(max(col("watermark")).as("w")).collect()
       Option(rows(0).getString(0)).getOrElse(default)
     } catch {

@@ -163,7 +163,7 @@ object Pca {
   }
 
   def load(s: SparkSession, path: String): PcaModel = {
-    val rows = s.read.parquet(path).collect()
+    val rows = graft.Tables.parquet(s, path).collect()
     val mean = rows.find(_.getAs[String]("kind") == "mean").get
       .getAs[scala.collection.Seq[Double]]("vec").toArray
     val cs = rows.filter(_.getAs[String]("kind") == "component")

@@ -91,7 +91,7 @@ object PqModel {
   }
 
   def load(s: SparkSession, path: String): PqModel = {
-    val rows = s.read.parquet(path).collect()
+    val rows = graft.Tables.parquet(s, path).collect()
     def vecsOf(kind: String): Array[(Int, Int, Array[Double])] = rows
       .filter(_.getAs[String]("kind") == kind)
       .map(r => (r.getAs[Int]("j"), r.getAs[Int]("i"),

@@ -163,7 +163,7 @@ object Similarity {
     * holding expected bucket occupancy near a constant (2⁵ = 32
     * vectors) means nPlanes = log₂N − 5, floored at the gate-corpus
     * setting. The response curve is MEASURED, not assumed (BASELINE.md
-    * r9/r10, [[graft.tools.GraphKnobProbe]] at sf1 = 20,000 vectors:
+    * r9/r10, GraphKnobProbe at sf1 = 20,000 vectors:
     * nPlanes 6 → 24.6 s, 8 → 8.0 s, 9 → 6.6 s, recall@3 = 1.00
     * throughout); this formula reproduces the probe's best point
     * (N=20000 → 9) while leaving every oracle-compared SF at the
@@ -242,25 +242,12 @@ object Similarity {
     * [[autoNPlanes]] occupancy dial: one metadata-cheap parquet count
     * sizes the corpus and the build self-tunes with it — the r9
     * scale finding (fixed 6 planes cost 6.3× wall at 10× data) is
-    * engine behavior now, not a deployment footnote. */
+    * engine behavior now, not a deployment footnote.
+    *
+    * It is [[annGraphLshRefined]] at `rounds = 0`. */
   def annGraphLsh(s: SparkSession, dir: String, nTables: Int = 6,
-                  nPlanes: Option[Int] = None, m: Int = GraphM,
-                  beam: Option[Int] = None,
-                  hops: Option[Int] = None, k: Int = 3, nQueries: Int = 5,
-                  nEntries: Int = 4,
-                  bucketCap: Int = DefaultBucketCap): DataFrame = {
-    val all = emb(s, dir)
-    val n = memoCount(dir)(t(s, dir, "embeddings").count())
-    val nP = nPlanes.getOrElse(autoNPlanes(n))
-    val undirected = lshPairsMulti(all, threshold = -2.0, nTables, nP,
-      dim = 64, bucketCap)
-    val scored = undirected
-      .select(col("id_a").as("src"), col("id_b").as("dst"), col("cos"))
-      .unionByName(undirected
-        .select(col("id_b").as("src"), col("id_a").as("dst"), col("cos")))
-    beamSearch(all, topMGraph(scored, m), beam.getOrElse(autoBeam(n)),
-      hops.getOrElse(autoHops(n)), k, nQueries, nEntries)
-  }
+                  nPlanes: Option[Int] = None): DataFrame =
+    annGraphLshRefined(s, dir, rounds = 0, nTables, nPlanes)
 
   /** s19: [[annGraphLsh]] + NN-descent refinement (Dong et al.,
     * WWW '11) — the graph-quality step the raw-LSH build lacks in
@@ -284,8 +271,7 @@ object Similarity {
   def annGraphLshRefined(s: SparkSession, dir: String,
                          rounds: Int = S19Rounds,
                          nTables: Int = 6, nPlanes: Option[Int] = None,
-                         m: Int = GraphM, beam: Option[Int] = None,
-                         hops: Option[Int] = None, k: Int = 3,
+                         m: Int = GraphM, k: Int = 3,
                          nQueries: Int = 5,
                          nEntries: Int = 4,
                          bucketCap: Int = DefaultBucketCap): DataFrame = {
@@ -300,10 +286,11 @@ object Similarity {
       col("nrm").as("na"))
     val bSide = all.select(col("vec_id").as("id_b"), col("v").as("vb"),
       col("nrm").as("nb"))
-    var cs = lshPairsMulti(all, threshold = -2.0, nTables, nP,
+    val pairs = lshPairsMulti(all, threshold = -2.0, nTables, nP,
         dim = 64, bucketCap)
       .select(col("id_a"), col("id_b"), col("cos"))
-      .localCheckpoint()
+    // only the refinement rounds re-read the candidates
+    var cs = if (rounds > 0) pairs.localCheckpoint() else pairs
     for (_ <- 1 to rounds) {
       val g = topMGraph(directed(cs), m)
       val nn = g.as("g1").join(g.as("g2"),
@@ -319,8 +306,8 @@ object Similarity {
             .as("cos"))
       cs = cs.unionByName(fresh).localCheckpoint()
     }
-    beamSearch(all, topMGraph(directed(cs), m), beam.getOrElse(autoBeam(n)),
-      hops.getOrElse(autoHops(n)), k, nQueries, nEntries)
+    beamSearch(all, topMGraph(directed(cs), m), autoBeam(n), autoHops(n),
+      k, nQueries, nEntries)
   }
 
   /** s18: incremental INSERT into the graph index — the lifecycle step

@@ -985,34 +985,59 @@ object TextOps {
     * derivation and the join-back). The "kernel once per DISTINCT word"
     * economy is kept by a per-task memo: the closure (and its HashMap)
     * is deserialized per task, so each task Viterbi/merge-encodes a
-    * word at most once (guide §4.5 once-per-task state; capped at 2^20
-    * entries so a pathological vocabulary degrades to recompute, never
-    * OOM). The memo is task-lifetime state for a PURE function of
+    * word at most once (guide §4.5 once-per-task state; a [[WordMemo]],
+    * bounded in entries and in key characters, so a pathological
+    * vocabulary degrades to recompute, never OOM). The memo is
+    * task-lifetime state for a PURE function of
     * (word, pinned model literal) — never a result keyed on the input
     * dir, and it dies with the task. Tokenization is
     * `trimSpaces(text).split("\\s+", -1)` — identical to the column form
     * `split(trim(text), "\\s+")` (Spark's `trim` strips only ' ', and its
     * split is Java-regex with limit -1), so n_words is bit-equal to the
     * exploded count, tabs and newlines at the ends included. */
-  private def encodeCountsUdf(nSubOf: String => Long) = {
-    val memo = new java.util.HashMap[String, java.lang.Long]()
+  private[graft] def encodeCountsUdf(nSubOf: String => Long) = {
+    val memo = new WordMemo
     udf { text: String =>
       val toks = trimSpaces(text).split("\\s+", -1)
       var nw = 0L
       var ns = 0L
       var i = 0
       while (i < toks.length) {
-        val w = toks(i)
-        var v = memo.get(w)
-        if (v == null) {
-          v = java.lang.Long.valueOf(nSubOf(w))
-          if (memo.size < (1 << 20)) memo.put(w, v)
-        }
         nw += 1L
-        ns += v.longValue()
+        ns += memo.getOrCompute(toks(i), nSubOf)
         i += 1
       }
       (nw, ns)
+    }
+  }
+
+  /** [[WordMemo]]'s bounds. The entry count alone does not bound its
+    * memory: 2^20 keys of a few KB each (URLs, base64 runs) would hold
+    * GBs per task. 2^23 key chars (16 MB of UTF-16) allows 8 chars per
+    * entry at the entry cap, about an ordinary vocabulary's mean. */
+  private[graft] val MemoMaxEntries: Int = 1 << 20
+  private[graft] val MemoMaxKeyChars: Long = 1L << 23
+
+  /** A word → count memo that stops growing once it holds
+    * [[MemoMaxEntries]] words or a word would take its keys past
+    * [[MemoMaxKeyChars]] characters; words it does not hold are
+    * computed on every lookup. */
+  private[graft] final class WordMemo extends Serializable {
+    private val memo = new java.util.HashMap[String, java.lang.Long]()
+    private var chars = 0L
+    def size: Int = memo.size
+    def keyChars: Long = chars
+    def getOrCompute(w: String, f: String => Long): Long = {
+      val v = memo.get(w)
+      if (v != null) v.longValue()
+      else {
+        val x = f(w)
+        if (memo.size < MemoMaxEntries && chars + w.length <= MemoMaxKeyChars) {
+          memo.put(w, x)
+          chars += w.length
+        }
+        x
+      }
     }
   }
 

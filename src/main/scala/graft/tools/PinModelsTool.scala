@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorExprs.dot
@@ -16,10 +15,7 @@ import graft.operators.{Pca, PqModel, Similarity}
   * `sbt "runMain graft.tools.PinModelsTool" > .../Pinned.scala`. */
 object PinModelsTool {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val normed = graft.Tables.t(spark, dir, "embeddings")
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: re-derive the t29 pinned unigram-LM model — the t27
   * hard-EM fit at the gate SF, emitted as the (piece, final-round
   * count) literal pasted into `TextOps.pinnedUnigram`. Counts are
@@ -15,10 +13,7 @@ import org.apache.spark.sql.SparkSession
 object PinUnigramTool {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val docs = graft.Tables.t(spark, dir, "documents")
     val (pieces, counts) = graft.operators.TextOps.unigramEm(docs, "text")
     val entries = pieces.map(p => (p, counts.getOrElse(p, 0L)))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Dev tool: derive an sf1 (10×) dataset from the driver's sf0.1
@@ -38,15 +38,7 @@ object ScaleUpTool {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "testdata-sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftExtensions.register(spark) // SQL functions + fork-free file:// I/O
+    val spark = graft.LocalSession()
 
     val copies = spark.range(factor).select(col("id").cast("int").as("copy"))
     def rep(name: String, keyCols: Seq[String])

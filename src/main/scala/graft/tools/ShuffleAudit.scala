@@ -106,14 +106,7 @@ object ShuffleAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val outPath = if (args.length > 1) args(1) else "shuffle_audit.json"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftExtensions.register(spark) // SQL functions + fork-free file:// I/O
+    val spark = graft.LocalSession()
     // spark.driver.memory is inert in local mode (the JVM is already
     // up — r15 ADVICE); the heap must come from sbt -mem / JAVA_OPTS.
     // Print what the audit actually ran with so spill numbers are

@@ -47,4 +47,35 @@ class HardeningSpec extends SparkSuite {
       .select("doc_id", "n_words").as[(Long, Long)].collect().toSeq
     assert(words == want.map(w => (w._1, w._2)))
   }
+
+  test("the per-task encode memo stops growing at its key-character bound, and counts still equal the column form") {
+    // keys of 2^16 chars: the character bound holds fewer than 128 of
+    // them, far under the entry bound
+    val long = "x" * (1 << 16)
+    val words = (0 until 160).map(i => s"$long$i")
+    val memo = new TextOps.WordMemo
+    val sizes = words.map { w =>
+      assert(memo.getOrCompute(w, _.length.toLong) == w.length)
+      memo.size
+    }
+    assert(memo.keyChars <= TextOps.MemoMaxKeyChars, memo.keyChars)
+    assert(memo.size < words.size && sizes.drop(memo.size) == Seq.fill(words.size - memo.size)(memo.size),
+      s"memo kept growing: ${sizes.takeRight(5)}")
+    assert(memo.getOrCompute(words.last, _ => -1L) == -1L, "a word past the bound is computed, not held")
+    assert(memo.getOrCompute(words.head, _ => -1L) == words.head.length, "a held word is not recomputed")
+
+    // one task sees every word twice: once to fill the memo past its
+    // bound, once more where the words it dropped are recomputed
+    val docs = Seq((1L, words.mkString(" ")), (2L, words.reverse.mkString("\t "))).toDF("doc_id", "text")
+      .coalesce(1)
+    val k = TextOps.encodeCountsUdf(_.length.toLong)
+    val got = docs.select(col("doc_id"), k(col("text")).as("k"))
+      .select(col("doc_id"), col("k._1"), col("k._2")).orderBy("doc_id")
+      .as[(Long, Long, Long)].collect().toSeq
+    val want = docs
+      .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("w"))
+      .groupBy("doc_id").agg(count(lit(1)), sum(length(col("w"))).cast("long"))
+      .orderBy("doc_id").as[(Long, Long, Long)].collect().toSeq
+    assert(got == want)
+  }
 }

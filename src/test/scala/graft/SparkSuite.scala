@@ -12,18 +12,6 @@ trait SparkSuite extends AnyFunSuite {
 }
 
 object SparkSuite {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // the same attach every main does, so specs run the shipped I/O path
-    GraftExtensions.register(s)
-    s
-  }
+  /** Four cores whatever the host, so specs see one plan shape. */
+  lazy val session: SparkSession = LocalSession(4)
 }

@@ -81,7 +81,8 @@ class TablesSpec extends SparkSuite {
     }
   }
 
-  test("registerAll runs no Spark job") {
+  /** Spark jobs `body` launches on this thread. */
+  private def jobsOf(body: => Unit): Int = {
     val group = s"tables-spec-${System.nanoTime}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
@@ -91,12 +92,54 @@ class TablesSpec extends SparkSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      spark.sparkContext.setJobGroup(group, "Tables.registerAll")
-      try Tables.registerAll(spark, sf)
+      spark.sparkContext.setJobGroup(group, "TablesSpec")
+      try body
       finally spark.sparkContext.clearJobGroup()
       org.apache.spark.sql.graftglue.drainListenerBus(spark)
     } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get == 0, s"registerAll launched ${jobs.get} Spark jobs")
+    jobs.get
+  }
+
+  test("registerAll runs no Spark job") {
+    val jobs = jobsOf(Tables.registerAll(spark, sf))
+    assert(jobs == 0, s"registerAll launched $jobs Spark jobs")
+  }
+
+  test("model and watermark loads run only their collect's jobs") {
+    import graft.operators.{Curation, Ingest, Pca, Pinned}
+    val weights = Array.tabulate(256)(_.toLong * 7 - 900)
+    Curation.saveQualityModel(spark, weights, s"$tmp/quality")
+    Pinned.pq.save(spark, s"$tmp/pq")
+    Pca.pinnedModel.save(spark, s"$tmp/pca")
+    Ingest.writeWatermark(spark, s"$tmp/watermark", "2024-09-03 04:05:06")
+    // each load's own collect, over a read that is handed its schema
+    val schemas = Seq("quality", "pq", "pca", "watermark")
+      .map(n => n -> spark.read.parquet(s"$tmp/$n").schema).toMap
+    def given(path: String) =
+      spark.read.schema(schemas(path.stripPrefix(s"$tmp/"))).parquet(path)
+    val loads = Seq[(String, () => Any, () => Any)](
+      ("Curation.loadQualityModel",
+        () => assert(Curation.loadQualityModel(spark, s"$tmp/quality").sameElements(weights)),
+        () => given(s"$tmp/quality").select("f", "w_micro").collect()),
+      ("PqModel.load",
+        () => assert(graft.operators.PqModel.load(spark, s"$tmp/pq").books.length ==
+          Pinned.pq.books.length),
+        () => given(s"$tmp/pq").collect()),
+      ("Pca.load",
+        () => assert(Pca.load(spark, s"$tmp/pca").mean.sameElements(Pca.pinnedModel.mean)),
+        () => given(s"$tmp/pca").collect()),
+      ("Ingest.readWatermark",
+        () => assert(Ingest.readWatermark(spark, s"$tmp/watermark") == "2024-09-03 04:05:06"),
+        () => given(s"$tmp/watermark")
+          .agg(org.apache.spark.sql.functions.max(col("watermark"))).collect()))
+    val extra = loads.map { case (name, load, collect) =>
+      val want = jobsOf(collect())
+      assert(want > 0, name)
+      (name, jobsOf(load()), want)
+    }.filter { case (_, got, want) => got != want }
+    assert(extra.isEmpty, extra.map { case (n, got, want) =>
+      s"$n ran $got Spark jobs, its collect alone $want" }.mkString("; "))
+    assert(Ingest.readWatermark(spark, s"$tmp/no-watermark") == "2024-09-01 00:00:00")
   }
 
   test("a missing table or one with no data file fails with Spark's AnalysisException") {
