@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -496,18 +496,26 @@ object Dedup {
 
   /** Connected components over an undirected (src, dst) edge frame.
     * Returns (labels, rounds): labels has one row per distinct endpoint
-    * with `lbl` = the smallest node of its component; rounds == 0 means
-    * the graph was empty or solved on the driver (see below).
+    * with `lbl` = the smallest node of its component (a null endpoint
+    * gets a null label); rounds == 0 means the graph was solved on the
+    * driver, or had no edge between distinct nodes.
     *
-    * Small-graph finisher: when the surviving edge set fits comfortably
-    * on the driver (≤ `localEdgeThreshold` edges, long-typed nodes), it
-    * is collected and solved with union-find in one pass — the same
-    * size-gated locality trade a broadcast join makes, and the standard
-    * endgame move for MPC connected-components (run distributed rounds
-    * only while the problem is actually distributed-sized). Near-dup
-    * pair graphs are tiny relative to their corpora (pairs ∝ dups, not
-    * docs), so this is the common case even at 100 TB corpus scale; a
-    * billion-edge graph takes the star-contraction loop below instead.
+    * Small-graph finisher: one bounded fetch of at most
+    * `localEdgeThreshold + 1` pair rows (long-typed nodes only). When
+    * the pair frame fits under the bound — the bound counts fetched
+    * pair rows, self-loops, duplicates and null endpoints included — the
+    * driver solves it with union-find, labels every distinct endpoint
+    * and returns the labels as a local relation: one fetch, no
+    * checkpoint, no aggregate, and nothing left to run when the labels
+    * are driven. It is the same size-gated locality trade a broadcast
+    * join makes, and the standard endgame move for MPC connected
+    * components (run distributed rounds only while the problem is
+    * actually distributed-sized). Near-dup pair graphs are tiny
+    * relative to their corpora (pairs ∝ dups, not docs), so this is the
+    * common case even at 100 TB corpus scale. Over the bound, a
+    * billion-edge graph takes the star-contraction loop below, which
+    * reads the partitions of the checkpointed pair frame that the
+    * fetch already computed instead of recomputing them.
     *
     * Convergence: the round function (large-star ∘ small-star) is a
     * deterministic function of the edge set, so an unchanged edge set
@@ -523,12 +531,19 @@ object Dedup {
                                          checkEvery: Int = ccCheckEvery,
                                          maxRounds: Int = 64,
                                          localEdgeThreshold: Long = 500000L): (DataFrame, Int) = {
-    // The pair frame is typically an EXPENSIVE near-dup join, and it is
-    // consumed three times below (both node projections + the initial
-    // edge set). A lazy checkpoint makes the join run once — the eager
-    // edge-seed checkpoint right after materializes it as a side
-    // effect. (d05 at sf0.1: 6.4 s -> 2.9 s.)
+    // The pair frame is typically an EXPENSIVE near-dup join, consumed
+    // by the bounded fetch and, over the bound, by both node projections
+    // and the initial edge set. A lazy checkpoint makes the join run
+    // once. (d05 at sf0.1: 6.4 s -> 2.9 s.)
     val pairsOnce = pairs.localCheckpoint(eager = false)
+    val longTyped = pairs.schema.fields.forall(_.dataType ==
+      org.apache.spark.sql.types.LongType)
+    if (longTyped) {
+      val fetched = pairsOnce.select("src", "dst")
+        .limit(math.min(localEdgeThreshold, Int.MaxValue - 1L).toInt + 1).collect()
+      if (fetched.length <= localEdgeThreshold)
+        return (localLabels(pairs, fetched), 0)
+    }
     val nodes = pairsOnce.select(col("src").as("n"))
       .union(pairsOnce.select(col("dst").as("n"))).distinct()
     def signature(e: DataFrame): (Long, Long) = {
@@ -543,18 +558,6 @@ object Dedup {
     // forest its signature matches round 1's and we stop there.
     var edges = pairsOnce.filter(col("src") =!= col("dst")).localCheckpoint()
     var prevSig = signature(edges)
-    val longTyped = edges.schema.fields.forall(_.dataType ==
-      org.apache.spark.sql.types.LongType)
-    if (prevSig._1 > 0L && prevSig._1 <= localEdgeThreshold && longTyped) {
-      val roots = localUnionFind(
-        edges.collect().map(r => (r.getLong(0), r.getLong(1))))
-      val rootsDf = edges.sparkSession
-        .createDataFrame(roots.toSeq).toDF("src", "root")
-      val labels = nodes
-        .join(broadcast(rootsDf), nodes("n") === col("src"), "left")
-        .select(col("n"), coalesce(col("root"), col("n")).as("lbl"))
-      return (labels, 0)
-    }
     var rounds = 0
     var converged = prevSig._1 == 0L
     while (!converged) {
@@ -575,6 +578,28 @@ object Dedup {
         nodes("n") === col("src"), "left")
       .select(col("n"), coalesce(col("root"), col("n")).as("lbl"))
     (labels, rounds)
+  }
+
+  /** The driver path's labels: union-find over the fetched rows' edges
+    * between distinct non-null nodes, then one `(n, lbl)` row per
+    * distinct endpoint — a node seen only in self-loops labels itself,
+    * a null endpoint gets a null label — as a local relation, with the
+    * loop path's column types and nullability. */
+  private def localLabels(pairs: DataFrame, fetched: Array[Row]): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    val roots = localUnionFind(fetched.collect {
+      case r if !r.isNullAt(0) && !r.isNullAt(1) && r.getLong(0) != r.getLong(1) =>
+        (r.getLong(0), r.getLong(1))
+    })
+    val labels = fetched.iterator.flatMap(r => Iterator(r.get(0), r.get(1))).distinct
+      .map {
+        case n: java.lang.Long => Row(n, roots.getOrElse(n.longValue, n.longValue))
+        case _ => Row(null, null)
+      }.toSeq
+    val nullable = pairs.schema("src").nullable || pairs.schema("dst").nullable
+    pairs.sparkSession.createDataFrame(labels.asJava,
+      StructType(Seq(StructField("n", LongType, nullable), StructField("lbl", LongType, nullable))))
   }
 
   /** Path-halving union-find, then relabel every component by its

@@ -16,9 +16,12 @@ import org.apache.spark.sql.types._
   *  - malformed lines become null rows instead of failing the pipeline
   *    (retrieval.py:104-113 error-tolerant map → PERMISSIVE from_json)
   *
-  * Implementation trick: parsing into map<string,string> makes Spark
-  * stringify any non-scalar value to compact JSON text natively — the
-  * whole stage is built-in expressions, no UDF.
+  * Implementation: each line parses straight into an array of the
+  * 13-field string struct, and Spark's JSON reader stringifies any
+  * non-scalar value of a string field to compact JSON text natively —
+  * the whole stage is built-in expressions, no UDF, and keys outside
+  * the whitelist are skipped unread. A key given twice in one record
+  * resolves to its last occurrence, as `json.loads` does.
   */
 object Normalize {
 
@@ -29,10 +32,11 @@ object Normalize {
     "resource", "type", "amount", "before", "after", "notes",
     "executeAt", "createdAt")
 
-  private val lineSchema = ArrayType(MapType(StringType, StringType))
+  private val lineSchema =
+    ArrayType(StructType(whitelist.map(StructField(_, StringType))))
 
   /** Stringify-nested rule: JSON object/array values arrive as their
-    * JSON text from the map parse; the empty object becomes "".
+    * JSON text from the parse; the empty object becomes "".
     *
     * DELIBERATE DEVIATION from the reference: normalization.py:96-102
     * stringifies nested values with Python `str()`, producing Python
@@ -50,10 +54,16 @@ object Normalize {
     * columns. Malformed lines yield a single all-null row (PERMISSIVE),
     * which callers can drop with `.na.drop("all", whitelist)`. */
   def normalizeJsonLines(lines: DataFrame, column: String = "value"): DataFrame = {
+    val line = col(column)
+    // Spark reads a JSON object root as a one-record array when the
+    // element type is a struct; an object root is no array of records
+    // and stays a null row, so only a root that is an array (after
+    // JSON whitespace) parses
+    val arrayRoot = line.startsWith("[") || line.rlike("^[ \\t\\n\\r]*\\[")
     val parsed = lines
-      .select(explode_outer(from_json(col(column), lineSchema)).as("rec"))
+      .select(explode_outer(when(arrayRoot, from_json(line, lineSchema))).as("rec"))
     parsed.select(whitelist.map(k =>
-      normValue(element_at(col("rec"), k)).as(k)): _*)
+      normValue(col("rec").getField(k)).as(k)): _*)
   }
 
   /** Typed variant: the balance-log fact table with proper numeric /

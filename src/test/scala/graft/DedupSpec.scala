@@ -76,6 +76,26 @@ class DedupSpec extends SparkSuite {
     assert(dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expected)
   }
 
+  test("connectedComponents: a driver-sized graph costs one bounded fetch, " +
+       "no checkpoint or aggregate job, and nothing to collect its labels") {
+    val pairs = Seq((5L, 7L), (7L, 5L), (9L, 5L), (20L, 21L), (30L, 30L))
+      .toDF("src", "dst")
+    var labels: org.apache.spark.sql.DataFrame = null
+    val build = jobsIn { labels = Dedup.connectedComponents(pairs)._1 }
+    assert(!build.exists(_.site.startsWith("localCheckpoint")),
+      s"checkpoint job: ${build.map(_.site)}")
+    assert(build.forall(_.stages == 1), s"a job reads a shuffle (an aggregate): $build")
+    assert(build.size <= 3, s"${build.size} jobs: ${build.map(_.site)}")
+    val collect = jobsOf(labels.collect())
+    assert(collect == 0, s"collecting the labels ran $collect Spark jobs")
+  }
+
+  test("d05 builds and drives in at most 6 Spark jobs on the benchmark fixture") {
+    val jobs = jobsOf(Bench.drive(
+      SparkEntry.queries("d05_dup_clusters")(spark, "perfbench/fixture/sf0.001")))
+    assert(jobs <= 6, s"d05 ran $jobs Spark jobs")
+  }
+
   test("dupClusters on a pair-free corpus returns empty, not an error") {
     // threshold 1.01 > any possible jaccard → zero pairs
     assert(Dedup.dupClusters(spark, sf, threshold = 1.01).count() == 0)

@@ -54,6 +54,23 @@ class NormalizeSpec extends SparkSuite {
     assert(rows.map(_.getAs[String]("_id")).toSet == Set(null, "ok"))
   }
 
+  test("a key given twice in one record resolves to its last occurrence (json.loads)") {
+    val rows = normalize("""[{"_id":"first","amount":1,"_id":"last"}]""")
+    assert(rows.map(_.getAs[String]("_id")) == Seq("last"))
+    assert(rows.head.getAs[String]("amount") == "1")
+  }
+
+  test("a JSON object root is no array of records: one null row") {
+    val rows = normalize("""{"_id":"a","amount":5}""", """ {"_id":"b"}""")
+    assert(rows.length == 2)
+    assert(rows.forall(r => Normalize.whitelist.forall(r.getAs[String](_) == null)))
+  }
+
+  test("JSON whitespace before the array root still parses") {
+    val rows = normalize("\t[{\"_id\":\"a\"}]", " \r\n [{\"_id\":\"b\"},{\"_id\":\"c\"}]")
+    assert(rows.map(_.getAs[String]("_id")) == Seq("a", "b", "c"))
+  }
+
   test("all 13 contract fields are present in order") {
     val rows = normalize("""[{"_id":"a"}]""")
     assert(rows.head.schema.fieldNames.toSeq == Normalize.whitelist)

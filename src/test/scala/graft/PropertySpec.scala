@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 
 import graft.functions.Hashing
-import graft.operators.{Multimodal, Normalize}
+import graft.operators.{Dedup, Multimodal, Normalize}
 
 /** Property-based laws (SURVEY.md §5.3): partition-count invariance,
   * normalization round-trips, kernel determinism. Pure-JVM kernels are
@@ -16,13 +16,14 @@ import graft.operators.{Multimodal, Normalize}
   */
 class PropertySpec extends AnyFunSuite {
 
+  /** `n` samples from the generator, from a fixed seed. */
+  private def samples[A](gen: Gen[A], n: Int): Seq[A] =
+    Iterator.iterate(org.scalacheck.rng.Seed(42L))(_.next).take(n)
+      .flatMap(seed => gen.apply(Gen.Parameters.default, seed)).toSeq
+
   /** Minimal forAll: 100 samples from the generator. */
-  private def forAll[A](gen: Gen[A])(f: A => Unit): Unit = {
-    val seed0 = org.scalacheck.rng.Seed(42L)
-    Iterator.iterate(seed0)(_.next).take(100).foreach { seed =>
-      gen.apply(Gen.Parameters.default, seed).foreach(f)
-    }
-  }
+  private def forAll[A](gen: Gen[A])(f: A => Unit): Unit =
+    samples(gen, 100).foreach(f)
 
   private lazy val spark = SparkSuite.session
   private val sf = "/root/testdata/sf0.001"
@@ -183,5 +184,87 @@ class PropertySpec extends AnyFunSuite {
       assert(top > 0.0 && top <= 1.0)
       assert(math.abs(dup - math.floor((1.0 - d.toDouble / n) * 1e4 + 0.5) / 1e4) < 1e-12)
     }
+  }
+
+  // ---- connected components ----
+
+  private type Edge = (Option[Long], Option[Long])
+
+  /** Edge lists over a small node range, so self-loops are common,
+    * with duplicate and reversed copies of earlier edges mixed in and
+    * about one endpoint in ten null. */
+  private val ccGraphGen: Gen[List[Edge]] = for {
+    k <- Gen.chooseNum(1L, 12L)
+    node = Gen.frequency(9 -> Gen.chooseNum(0L, k).map(Option(_)), 1 -> Gen.const(None))
+    n <- Gen.chooseNum(0, 12)
+    edges <- Gen.listOfN(n, Gen.zip(node, node))
+    copies <- if (edges.isEmpty) Gen.const(Nil)
+      else Gen.chooseNum(0, 4).flatMap(Gen.listOfN(_,
+        Gen.oneOf(edges).flatMap(e => Gen.oneOf(e, e.swap))))
+  } yield edges ++ copies
+
+  /** Pure-Scala union-find: every endpoint, null included, to the
+    * smallest node of its component (null to null). */
+  private def ccReference(g: Seq[Edge]): Map[Option[Long], Option[Long]] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = { val p = parent.getOrElseUpdate(x, x); if (p == x) x else find(p) }
+    g.foreach {
+      case (Some(a), Some(b)) =>
+        val (ra, rb) = (find(a), find(b))
+        parent(math.max(ra, rb)) = math.min(ra, rb)
+      case _ =>
+    }
+    g.flatMap { case (a, b) => Seq(a, b) }.distinct.map(n => n -> n.map(find)).toMap
+  }
+
+  /** `connectedComponents` under the bound: its labels, one per row,
+    * and its rounds. */
+  private def ccLabels(g: Seq[Edge], bound: Long): (Seq[Edge], Int) = {
+    import spark.implicits._
+    val (labels, rounds) =
+      Dedup.connectedComponents(g.toDF("src", "dst"), localEdgeThreshold = bound)
+    def opt(v: Any) = Option(v).map(_.asInstanceOf[Long])
+    (labels.collect().toSeq.map(r => (opt(r.get(0)), opt(r.get(1)))), rounds)
+  }
+
+  private def assertLabels(got: Seq[Edge], g: Seq[Edge], path: String): Unit = {
+    val want = ccReference(g)
+    assert(got.size == want.size && got.toMap == want,
+      s"$path labels $got, union-find $want, graph $g")
+  }
+
+  /** Twelve sampled graphs and the empty one; their disjoint union
+    * (graph i's nodes shifted by 100·i) runs the distributed loop once
+    * for all of them. */
+  private lazy val ccGraphs = samples(ccGraphGen, 12) :+ Nil
+  private lazy val ccUnion = ccGraphs.zipWithIndex.flatMap { case (g, i) =>
+    g.map { case (a, b) => (a.map(_ + 100L * i), b.map(_ + 100L * i)) }
+  }
+
+  test("connected-components law: driver path, distributed loop and a " +
+       "pure-Scala union-find give the same labels") {
+    assert(ccGraphs.exists(_.exists { case (a, b) => a.isEmpty || b.isEmpty }),
+      "no null endpoint sampled")
+    assert(ccGraphs.exists(_.exists { case (a, b) => a.nonEmpty && a == b }),
+      "no self-loop sampled")
+    assert(ccGraphs.exists(g => g.distinct.size < g.size), "no duplicate edge sampled")
+    ccGraphs.foreach { g =>
+      val (got, rounds) = ccLabels(g, 500000L)
+      assert(rounds == 0, s"driver path ran $rounds rounds on $g")
+      assertLabels(got, g, "driver path")
+    }
+    assertLabels(ccLabels(Nil, 0L)._1, Nil, "distributed loop")
+    assertLabels(ccLabels(ccUnion, 0L)._1, ccUnion, "distributed loop")
+  }
+
+  test("connected-components gate: a bound equal to the pair-row count takes " +
+       "the driver path, one below it the loop, with the same labels") {
+    val n = ccUnion.size.toLong
+    val (driver, driverRounds) = ccLabels(ccUnion, n)
+    assert(driverRounds == 0, s"bound $n on $n rows left the driver path")
+    assertLabels(driver, ccUnion, "driver path")
+    val (loop, loopRounds) = ccLabels(ccUnion, n - 1)
+    assert(loopRounds > 0, s"bound ${n - 1} on $n rows took the driver path")
+    assertLabels(loop, ccUnion, "distributed loop")
   }
 }

@@ -7,7 +7,6 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.MetadataBuilder
@@ -79,25 +78,6 @@ class TablesSpec extends SparkSuite {
       assert(Tables.t(spark, dir, "events").schema("ts").dataType ==
         org.apache.spark.sql.types.TimestampType, tsType)
     }
-  }
-
-  /** Spark jobs `body` launches on this thread. */
-  private def jobsOf(body: => Unit): Int = {
-    val group = s"tables-spec-${System.nanoTime}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "TablesSpec")
-      try body
-      finally spark.sparkContext.clearJobGroup()
-      org.apache.spark.sql.graftglue.drainListenerBus(spark)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get
   }
 
   test("registerAll runs no Spark job") {
