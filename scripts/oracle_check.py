@@ -5,10 +5,13 @@ Usage: oracle_check.py <sfDir> <outDir> [--json <path>]
   <outDir> is what graft.Verify wrote: one parquet dir per query name +
   oracle_sql.json. Runs each oracle SQL in DuckDB over views named after
   the parquet tables in <sfDir>, sorts columns by name, and compares
-  values row-by-row (in result order) against the Spark parquet.
+  values row-by-row (in result order) against the Spark parquet. Each
+  [ok]/[FAIL] line ends with the seconds DuckDB took for that oracle, and
+  lines are flushed as they print, so a sweep cut by a timeout shows how
+  far it got and which oracles were slow.
 
   --json <path>: additionally write a driver-shaped per-query map
-  {name: {rows_match, schema_match, hash_match, err}} so each round close
+  {name: {rows_match, schema_match, hash_match, err, oracle_s}} so each round close
   can commit a CORRECTNESS_dev_r{N}.json even when the driver pipeline
   records nothing (VERDICT r13 task 1).
 
@@ -22,7 +25,7 @@ Usage: oracle_check.py <sfDir> <outDir> [--json <path>]
   "decomposed": true so one artifact records both kinds (VERDICT r14
   task 5; absorbs the former scripts/v06_check.py).
 """
-import json, sys, glob, os
+import json, sys, glob, os, time
 import duckdb
 import pandas as pd
 
@@ -98,6 +101,7 @@ DECOMPOSED = {"v06_dedup_impact": v06_decomposed}
 
 def main(sf_dir: str, out_dir: str, json_path: str = None,
          decompose=()) -> int:
+    sys.stdout.reconfigure(line_buffering=True)
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
@@ -139,27 +143,32 @@ def main(sf_dir: str, out_dir: str, json_path: str = None,
                             "hash_match": None,
                             "err": None if nonempty else "rows-only check: empty result"}
             continue
+        t0 = time.perf_counter()
         try:
             duck_df = norm(con.execute(oracles[name]).fetchdf())
         except Exception as e:
-            print(f"[FAIL] {name}: oracle SQL error: {e}")
+            oracle_s = round(time.perf_counter() - t0, 3)
+            print(f"[FAIL] {name}: oracle SQL error: {e} (oracle {oracle_s:.2f} s)")
             failures += 1
             report[name] = {"rows_match": False, "schema_match": False,
-                            "hash_match": False, "err": f"oracle SQL error: {e}"}
+                            "hash_match": False, "err": f"oracle SQL error: {e}",
+                            "oracle_s": oracle_s}
             continue
+        oracle_s = round(time.perf_counter() - t0, 3)
         ok, why = compare(spark_df, duck_df)
         if ok:
             print(f"[ok]   {name}: {len(spark_df)} rows, "
-                  f"{len(spark_df.columns)} cols")
+                  f"{len(spark_df.columns)} cols (oracle {oracle_s:.2f} s)")
             report[name] = {"rows_match": True, "schema_match": True,
-                            "hash_match": True, "err": None}
+                            "hash_match": True, "err": None,
+                            "oracle_s": oracle_s}
         else:
-            print(f"[FAIL] {name}: {why}")
+            print(f"[FAIL] {name}: {why} (oracle {oracle_s:.2f} s)")
             failures += 1
             report[name] = {
                 "rows_match": len(spark_df) == len(duck_df),
                 "schema_match": list(spark_df.columns) == list(duck_df.columns),
-                "hash_match": False, "err": why}
+                "hash_match": False, "err": why, "oracle_s": oracle_s}
     if json_path:
         with open(json_path, "w") as f:
             json.dump(report, f, indent=1, sort_keys=True)

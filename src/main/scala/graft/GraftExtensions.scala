@@ -1,22 +1,26 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.graftglue.{columnOf, eagerExpressionOf, expressionOf, scalaUdfOf}
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{DotProduct, Hashing, NibbleHistogram, VectorExprs}
 import graft.operators.Similarity
 
 /** Session-extension entry point: registers graft's kernels as SQL
-  * functions, so the WHOLE engine surface — including the sketch,
-  * LSH-bucket, and vector kernels the dedup/ANN operators are built
-  * from — is addressable as `spark.sql(...)` text anywhere the library
-  * is on the classpath. This is the reference's delegated-SQL seam
-  * (README.md:2 hands its analytics to BigQuery as SQL strings) done
-  * natively: SqlParitySpec proves every registered query has a SQL-text
-  * form that reproduces the DataFrame-API result exactly.
+  * functions, so the sketch, LSH-bucket and vector kernels the
+  * dedup/ANN operators are built from are addressable as
+  * `spark.sql(...)` text anywhere the library is on the classpath.
+  * This is the reference's delegated-SQL seam (README.md:2 hands its
+  * analytics to BigQuery as SQL strings) done natively. A whole
+  * registered query is one more SQL call: `graft_query('<name>')`, the
+  * table function [[Tables.registerAll]] binds to its table directory
+  * ([[queryFunction]]). SqlParitySpec proves every registered query has
+  * a SQL-text form that reproduces the DataFrame-API result exactly.
   *
   * Activate with:
   * {{{
@@ -146,13 +150,35 @@ object GraftExtensions {
       scalaUdfOf(graft.operators.TextOps.unigramSegmentUnkUdf, children)
     })
 
+  /** The `graft_query('<name>')` table function over the tables in
+    * `dir`: the analyzed plan of `SparkEntry.queries(name)(spark, dir)`,
+    * so SQL composes with the operator itself (joins, filters,
+    * aggregates over it) instead of replaying it as relational text.
+    * The name is looked up when the function is called; registering
+    * the builder runs no job and builds no operator. A missing or
+    * unknown name, a non-literal or non-string argument, or a number
+    * of arguments other than one fails analysis with the value named. */
+  private[graft] def queryFunction(spark: SparkSession,
+                                   dir: String): Seq[Expression] => LogicalPlan = {
+    case Seq(Literal(name: UTF8String, _: StringType)) =>
+      val build = SparkEntry.queries.getOrElse(name.toString,
+        throw new IllegalArgumentException(
+          s"graft_query: '$name' is not a key of SparkEntry.queries"))
+      build(spark, dir).queryExecution.analyzed
+    case Seq(arg) => throw new IllegalArgumentException(
+      s"graft_query: the query name must be a STRING literal, got ${arg.sql}")
+    case args => throw new IllegalArgumentException(
+      s"graft_query takes 1 argument (a query name), got ${args.length}: " +
+        args.map(_.sql).mkString("(", ", ", ")"))
+  }
+
   /** Attach graft to an already-running session (the extensions path
     * only applies when the session is first built): register the same
     * [[sqlFunctions]] the extension class injects, install the
     * [[graft.plans.TopKStrategy]] planner strategy, and route `file://`
     * I/O through the fork-free [[graft.io.LocalFs]]. [[LocalSession]]
     * calls it for every main and the spec suite. Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+  def register(spark: SparkSession): Unit = {
     sqlFunctions.foreach { case (name, builder) =>
       org.apache.spark.sql.graftglue.registerFunction(spark, name, builder)
     }

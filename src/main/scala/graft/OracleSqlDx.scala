@@ -14,7 +14,7 @@ object OracleSqlDx {
 
   /** x15: the pinned weight vector as a DuckDB list literal, indexed
     * by the md5-hex-prefix bucket. */
-  private[graft] lazy val x15OracleSql: String = {
+  private lazy val x15OracleSql: String = {
     val ws = graft.operators.Curation.qualityModelMicro.mkString("[", ", ", "]")
     s"""WITH fb AS (
            SELECT doc_id,
@@ -853,7 +853,7 @@ object OracleSqlDx {
   /** x14: nearest pinned cell (the s05 argmax arithmetic, ties to the
     * lower index) + the x13-style deterministic md5 pick, ranked per
     * cell — cluster-balanced sampling. */
-  private[graft] lazy val x14OracleSql: String = {
+  private lazy val x14OracleSql: String = {
     val dts = centroidDotsList(Pinned.ivfCentroids)
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          n AS (SELECT vec_id,
@@ -1362,9 +1362,9 @@ object OracleSqlDx {
     // bit-identical doubles.
   )
 
-  /** x05/x16 Spark-dialect forms — named so v10's composed Spark form
-    * replays them verbatim as CTEs ([[OracleSqlMv]]). */
-  private[graft] lazy val x05SparkSql: String =
+  /** x05/x16 Spark-dialect forms — x05's is also the first CTE of
+    * [[x24SparkSql]]. */
+  private lazy val x05SparkSql: String =
     """WITH toks AS (
            SELECT doc_id,
              substring(md5(CAST(doc_id AS STRING)), 1, 2) AS bucket,
@@ -1390,7 +1390,7 @@ object OracleSqlDx {
          FROM train t JOIN test_sh USING (shingle)
          GROUP BY t.doc_id, n_shingles ORDER BY t.doc_id"""
 
-  private[graft] lazy val x16SparkSql: String =
+  private lazy val x16SparkSql: String =
     s"""WITH toks AS (
            SELECT doc_id,
              substring(md5(CAST(doc_id AS STRING)), 1, 2) AS bucket,

@@ -51,24 +51,22 @@ object OracleSqlHelpers {
   }
 
 
-  /** The graph-beam-search tail shared by the s16/s17/s18 replays (and
-    * both dialects of each): expects a prior CTE `sc(src, dst, cos)` —
-    * the candidate edge stream — plus a corpus CTE `eTab(vec_id, v
-    * [, nrm])`; emits the top-m graph, the pinned-entry seed, `hops`
-    * frontier/expand/score/union blocks, and the final top-k select.
-    * `cos(a, b)` renders the dialect's rounded-cosine expression.
-    * The t13 unrolling discipline: the engine's FIXED-hop beam search
-    * is re-derived as chained CTEs (one block per hop), so the oracle
-    * runs the identical computation, not a re-derivation; parameters
-    * must mirror [[graft.operators.Similarity.annGraph]]'s defaults. */
+  /** The graph-beam-search tail shared by the s16/s17/s18 replays:
+    * expects a prior CTE `sc(src, dst, cos)` — the candidate edge
+    * stream — plus the corpus CTE `e(vec_id, v)`; emits the top-m
+    * graph, the pinned-entry seed, `hops` frontier/expand/score/union
+    * blocks, and the final top-k select. The t13 unrolling
+    * discipline: the engine's FIXED-hop beam search is re-derived as
+    * chained CTEs (one block per hop), so the oracle runs the identical
+    * computation, not a re-derivation; parameters must mirror
+    * [[graft.operators.Similarity.annGraph]]'s defaults. */
   /** `finalCteHeader`: empty (default) ends the statement with the
     * ranked SELECT + ORDER BY; a header like `"res AS"` (or
     * `"res AS MATERIALIZED"` for the DuckDB dialect) instead wraps the
     * ranked select as one more CTE so a caller can keep composing —
     * the s20 insert-update replay consumes the insert edges this
     * way. */
-  private[graft] def graphBeamTail(cos: (String, String) => String,
-      eTab: String, qCols: String, m: Int = 12, beam: Int = 8,
+  private[graft] def graphBeamTail(m: Int = 12, beam: Int = 8,
       hops: Int = 4, k: Int = 3, nq: Int = 5, ne: Int = 4,
       qPred: String = "", entriesIn: String = "",
       finalCteHeader: String = ""): String = {
@@ -81,10 +79,10 @@ object OracleSqlHelpers {
              SELECT src, dst,
                row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rk
              FROM sc) WHERE rk <= $m),
-         q AS (SELECT $qCols FROM $eTab WHERE $qWhere),
+         q AS (SELECT vec_id AS q_id, v FROM e WHERE $qWhere),
          v0 AS (
-           SELECT q.q_id, n.vec_id AS n_id, ${cos("q", "n")} AS cos
-           FROM q JOIN $eTab n ON n.vec_id IN ($entries) AND n.vec_id <> q.q_id)"""
+           SELECT q.q_id, n.vec_id AS n_id, ${duckCos("q", "n")} AS cos
+           FROM q JOIN e n ON n.vec_id IN ($entries) AND n.vec_id <> q.q_id)"""
     for (h <- 1 to hops) {
       val prev = s"v${h - 1}"
       sb ++= s""",
@@ -97,8 +95,8 @@ object OracleSqlHelpers {
            SELECT DISTINCT f.q_id, g.dst AS n_id
            FROM f$h f JOIN g ON g.src = f.n_id WHERE g.dst <> f.q_id),
          n$h AS (
-           SELECT x.q_id, x.n_id, ${cos("q", "n")} AS cos
-           FROM x$h x JOIN q ON q.q_id = x.q_id JOIN $eTab n ON n.vec_id = x.n_id
+           SELECT x.q_id, x.n_id, ${duckCos("q", "n")} AS cos
+           FROM x$h x JOIN q ON q.q_id = x.q_id JOIN e n ON n.vec_id = x.n_id
            WHERE NOT EXISTS (
              SELECT 1 FROM $prev p WHERE p.q_id = x.q_id AND p.n_id = x.n_id)),
          v$h AS (SELECT * FROM $prev UNION ALL SELECT * FROM n$h)"""
@@ -118,35 +116,28 @@ object OracleSqlHelpers {
   private[graft] def duckCos(a: String, b: String): String =
     s"round(list_cosine_similarity($a.v, $b.v), 6)"
 
-  private[graft] def sparkCos(a: String, b: String): String =
-    s"round(graft_dot($a.v, $b.v) / ($a.nrm * $b.nrm), 6)"
 
-
-  /** NN-descent refinement CTEs shared by the s19 replays (both
-    * dialects): expects `cs0(id_a, id_b, cos)` — the canonical
-    * undirected scored candidate set (id_a < id_b) — plus the corpus
-    * CTE `eTab`; emits per round r the directed top-m graph `gr{r}`,
-    * the neighbor-of-neighbor proposals `nn{r}` (dst pairs sharing a
-    * graph src), the never-seen filter `fr{r}`, the scored fresh
-    * pairs `fs{r}`, and the union `cs{r}`. Mirrors
+  /** NN-descent refinement CTEs of the s19 replay: expects
+    * `cs0(id_a, id_b, cos)` — the canonical undirected scored
+    * candidate set (id_a < id_b) — plus the corpus CTE `e`; emits per
+    * round r the directed top-m graph `gr{r}`, the
+    * neighbor-of-neighbor proposals `nn{r}` (dst pairs sharing a graph
+    * src), the never-seen filter `fr{r}`, the scored fresh pairs
+    * `fs{r}`, and the union `cs{r}`. Mirrors
     * [[graft.operators.Similarity.annGraphLshRefined]] block for
     * block — the t13 unrolling discipline, fixed `rounds`. The caller
     * continues from `cs{rounds}`.
     *
-    * `materialized` (DuckDB dialect only — Spark SQL has no such
-    * keyword and Catalyst handles the reuse itself): gr/cs are each
-    * referenced 2–3 times downstream, and DuckDB 1.0 INLINES
-    * multi-referenced CTEs — without AS MATERIALIZED the expansion
-    * tree re-runs the bucket self-join per reference and the sf0.01
-    * replay goes from 1.2 s to >300 s (measured r10). The caller
+    * gr/cs are each referenced 2–3 times downstream, and DuckDB 1.0
+    * INLINES multi-referenced CTEs — without AS MATERIALIZED the
+    * expansion tree re-runs the bucket self-join per reference and the
+    * sf0.01 replay goes from 1.2 s to >300 s (measured r10). The caller
     * should mark its `cs0` the same way. */
-  private[graft] def nnDescentCtes(cos: (String, String) => String,
-      eTab: String, rounds: Int, m: Int = operators.Similarity.GraphM,
-      materialized: Boolean = false): String =
+  private[graft] def nnDescentCtes(rounds: Int): String = {
+    val m = operators.Similarity.GraphM
     (1 to rounds).map { r =>
       val prev = s"cs${r - 1}"
-      val mat = if (materialized) "MATERIALIZED " else ""
-      s"""gr$r AS $mat(
+      s"""gr$r AS MATERIALIZED (
            SELECT src, dst FROM (
              SELECT src, dst,
                row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rk
@@ -163,27 +154,13 @@ object OracleSqlHelpers {
              SELECT 1 FROM $prev c
              WHERE c.id_a = n.id_a AND c.id_b = n.id_b)),
          fs$r AS (
-           SELECT f.id_a, f.id_b, ${cos("ea", "eb")} AS cos
-           FROM fr$r f JOIN $eTab ea ON ea.vec_id = f.id_a
-           JOIN $eTab eb ON eb.vec_id = f.id_b),
-         cs$r AS $mat(SELECT * FROM $prev UNION ALL SELECT * FROM fs$r)"""
+           SELECT f.id_a, f.id_b, ${duckCos("ea", "eb")} AS cos
+           FROM fr$r f JOIN e ea ON ea.vec_id = f.id_a
+           JOIN e eb ON eb.vec_id = f.id_b),
+         cs$r AS MATERIALIZED (SELECT * FROM $prev UNION ALL SELECT * FROM fs$r)"""
     }.mkString(",\n         ")
-
-
-  private[graft] def s16Sql(duck: Boolean): String = {
-    val base =
-      if (duck) "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"
-      else
-        """e0 AS (SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v FROM embeddings),
-         e AS (SELECT vec_id, v, sqrt(graft_dot(v, v)) AS nrm FROM e0)"""
-    val cos: (String, String) => String = if (duck) duckCos else sparkCos
-    val qCols = if (duck) "vec_id AS q_id, v" else "vec_id AS q_id, v, nrm"
-    s"""WITH $base,
-         sc AS (
-           SELECT a.vec_id AS src, b.vec_id AS dst, ${cos("a", "b")} AS cos
-           FROM e a JOIN e b ON a.vec_id <> b.vec_id),
-         ${graphBeamTail(cos, "e", qCols)}"""
   }
+
 
   /** s18: the incremental-insert replay — the s17 bucket CTEs
     * restricted to the ingested corpus (vec_id ≥ splitId), the batch
@@ -218,11 +195,11 @@ object OracleSqlHelpers {
   }
 
 
-  /** Dialect-portable margin tail shared by the s22/s23 oracles AND
-    * their Spark-dialect forms (row_number / CAST / floor only): from
-    * a `pairs(src_id, tgt_id, c)` CTE with `c` the micro-scaled 6-dp
-    * cosine, per-node top-k integer sums → the Artetxe–Schwenk ratio
-    * margin r4-floored before ranking → best target per source. */
+  /** Margin tail shared by the s22/s23 oracles (row_number / CAST /
+    * floor only): from a `pairs(src_id, tgt_id, c)` CTE with `c` the
+    * micro-scaled 6-dp cosine, per-node top-k integer sums → the
+    * Artetxe–Schwenk ratio margin r4-floored before ranking → best
+    * target per source. */
   private[graft] def bitextTailSql(k: Int): String =
     s"""nnx AS (
            SELECT src_id, CAST(sum(c) AS BIGINT) AS sx,
@@ -255,11 +232,10 @@ object OracleSqlHelpers {
     TextOps.blocklist.map(t => s"'$t'").mkString(", ")
 
 
-  /** Dialect-portable MMR selection tail shared by the s24 oracle and
-    * its Spark-dialect form: from `cand(q_id, n_id, c)` and pair sims
-    * `pc(q_id, a, b, pcos)`, k−1 unrolled greedy rounds (the t13/s16
-    * fixed-iteration discipline). The λ and 1−λ literals are the
-    * ENGINE'S doubles interpolated verbatim (1−0.7 prints as
+  /** MMR selection tail of the s24 oracle: from `cand(q_id, n_id, c)`
+    * and pair sims `pc(q_id, a, b, pcos)`, k−1 unrolled greedy rounds
+    * (the t13/s16 fixed-iteration discipline). The λ and 1−λ literals
+    * are the ENGINE'S doubles interpolated verbatim (1−0.7 prints as
     * 0.30000000000000004 — both engines then multiply the identical
     * binary value). */
   private[graft] def mmrTailSql(k: Int, lambda: Double): String = {
@@ -703,9 +679,9 @@ object OracleSqlHelpers {
   }
 
 
-  /** s25 tail shared by both dialects: graded gains from the exact
-    * ranking, MRR + nDCG with the ENGINE'S discount/ideal doubles
-    * interpolated verbatim (Similarity.ndcgDiscount/ndcgIdeal). */
+  /** s25 oracle tail: graded gains from the exact ranking, MRR + nDCG
+    * with the ENGINE'S discount/ideal doubles interpolated verbatim
+    * (Similarity.ndcgDiscount/ndcgIdeal). */
   private[graft] def rankEvalTailSql(bfSql: String, ivSql: String): String = {
     val k = 3
     val gains = (1 to k).map(i =>

@@ -168,18 +168,6 @@ object OracleSqlMv {
              AS BIGINT) AS n_fps
            FROM documents""")
 
-  private[graft] lazy val v10SparkSql: String = v10Sql(
-    OracleSqlDx.x05SparkSql, OracleSqlDx.x16SparkSql,
-    OracleSqlHelpers.x18SparkSqlText, SparkDialectTail.t31Sql,
-    SparkDialectTail.v08Sql,
-    """SELECT CAST(count(*) AS BIGINT) AS n_train_shingled
-           FROM documents
-           WHERE size(split(trim(text), '\\s+')) >= 3
-             AND substring(md5(CAST(doc_id AS STRING)), 1, 2) >= '1a'""",
-    """SELECT CAST(count(DISTINCT
-             md5(lower(regexp_replace(trim(text), '\\s+', ' '))))
-             AS BIGINT) AS n_fps
-           FROM documents""")
 
   /** v02 replay — dialect-PORTABLE (runs verbatim in DuckDB AND via
     * spark.sql): one slim-key LEFT JOIN per FK edge, arms generated
@@ -856,7 +844,6 @@ object OracleSqlMv {
   )
 
   private[graft] val spark: Map[String, String] = Map(
-    "v10_contamination_report" -> v10SparkSql,
     "v09_tokenizer_drift" -> v09SparkSql,
     "m15_audio_spectral" -> m15Sql(duck = false),
     "m09_cdc_chunks" -> m09SparkSqlText,

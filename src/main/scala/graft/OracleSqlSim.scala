@@ -30,9 +30,14 @@ object OracleSqlSim {
   }
 
 
-  private[graft] lazy val s16OracleSql: String = s16Sql(duck = true)
-
-  private[graft] lazy val s16SparkSql: String = s16Sql(duck = false)
+  /** s16: the brute-force graph replay — every ordered pair scored as
+    * the candidate edge stream, then [[graphBeamTail]]. */
+  private[graft] lazy val s16OracleSql: String =
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         sc AS (
+           SELECT a.vec_id AS src, b.vec_id AS dst, ${duckCos("a", "b")} AS cos
+           FROM e a JOIN e b ON a.vec_id <> b.vec_id),
+         ${graphBeamTail()}"""
 
 
   /** s17: the LSH-built graph — candidate edges from the SAME
@@ -56,7 +61,7 @@ object OracleSqlSim {
          sc AS (
            SELECT id_a AS src, id_b AS dst, cos FROM cs
            UNION ALL SELECT id_b, id_a, cos FROM cs),
-         ${graphBeamTail(duckCos, "e", "vec_id AS q_id, v")}"""
+         ${graphBeamTail()}"""
 
 
   /** s19: the refined-graph replay — s17's bucket candidates as
@@ -76,14 +81,13 @@ object OracleSqlSim {
            SELECT id_a, id_b, ${duckCos("ea", "eb")} AS cos
            FROM cp JOIN e ea ON ea.vec_id = cp.id_a
            JOIN e eb ON eb.vec_id = cp.id_b),
-         ${nnDescentCtes(duckCos, "e", operators.Similarity.S19Rounds,
-           materialized = true)},
+         ${nnDescentCtes(operators.Similarity.S19Rounds)},
          sc AS (
            SELECT id_a AS src, id_b AS dst, cos
            FROM cs${operators.Similarity.S19Rounds}
            UNION ALL SELECT id_b, id_a, cos
            FROM cs${operators.Similarity.S19Rounds}),
-         ${graphBeamTail(duckCos, "e", "vec_id AS q_id, v")}"""
+         ${graphBeamTail()}"""
 
 
   private[graft] lazy val s18OracleSql: String = {
@@ -91,8 +95,7 @@ object OracleSqlSim {
     val entries = (split until split + operators.Similarity.S18NEntries)
       .mkString(", ")
     s"""WITH ${s18DuckChain("s18")},
-         ${graphBeamTail(duckCos, "e", "vec_id AS q_id, v",
-           k = operators.Similarity.GraphM,
+         ${graphBeamTail(k = operators.Similarity.GraphM,
            qPred = s"vec_id < $split", entriesIn = entries)}"""
   }
 
@@ -108,8 +111,7 @@ object OracleSqlSim {
       .mkString(", ")
     val m = operators.Similarity.GraphM
     s"""WITH ${s18DuckChain("s20")},
-         ${graphBeamTail(duckCos, "e", "vec_id AS q_id, v",
-           k = m, qPred = s"vec_id < $split", entriesIn = entries,
+         ${graphBeamTail(k = m, qPred = s"vec_id < $split", entriesIn = entries,
            finalCteHeader = "res AS MATERIALIZED")},
          inc AS MATERIALIZED (
            SELECT n_id AS src, q_id AS dst, cos FROM res),
@@ -508,10 +510,8 @@ object OracleSqlSim {
   }
 
 
-  /** s01 Spark-dialect replay — `private[graft]` so
-    * [[SparkDialectTail]] can compose it as the ground-truth side of
-    * the s21 recall evaluation (its s04 twin lives over there). */
-  private[graft] lazy val s01SparkSql: String =
+  /** s01 Spark-dialect replay. */
+  private lazy val s01SparkSql: String =
     """WITH e AS (
            SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v FROM embeddings
          ), n AS (
@@ -1033,7 +1033,7 @@ object OracleSqlSim {
     * [[s01OracleSql]] and approximate [[s04OracleSql]] statements as
     * derived tables (each carries its own WITH; k = 3 mirrors both) —
     * joined on (query, neighbor) and reduced to hits per query. */
-  private[graft] lazy val s21OracleSql: String =
+  private lazy val s21OracleSql: String =
     s"""WITH hits AS (
            SELECT bf.q_id, count(*) AS n_hits
            FROM ($s01OracleSql) bf
@@ -1050,7 +1050,7 @@ object OracleSqlSim {
 
   /** s25: MRR/nDCG replay over the s01 (exact) and s04 (IVF) member
     * replays as derived tables — the s21 composition. */
-  private[graft] lazy val s25OracleSql: String =
+  private lazy val s25OracleSql: String =
     rankEvalTailSql(s01OracleSql, s04OracleSql)
 
 
@@ -1577,7 +1577,6 @@ object OracleSqlSim {
          WHERE round(graft_dot(a.v, b.v) / (a.nrm * b.nrm), 6) >= 0.4
          ORDER BY id_a, id_b""",
     "s01_ann_bruteforce" -> s01SparkSql,
-    "s16_ann_graph" -> s16SparkSql,
     "s15_hard_negatives" ->
       """WITH e AS (
            SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v, label

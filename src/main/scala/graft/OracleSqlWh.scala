@@ -670,6 +670,26 @@ object OracleSqlWh {
            round(CAST(sum(floor(value * 100 + 0.5)) AS BIGINT) / CAST(100.0 AS DOUBLE), 4)
              AS total_value,
            date_format(max(ts), 'yyyy-MM-dd HH:mm:ss.SSSSSS') AS last_ts
-         FROM events GROUP BY 1 ORDER BY 1"""
+         FROM events GROUP BY 1 ORDER BY 1""",
+    "q20_approx_distinct" ->
+      """SELECT l_returnflag,
+         count(DISTINCT l_suppkey) AS n_supp,
+         count(DISTINCT l_partkey) AS n_part,
+         CAST(abs(approx_count_distinct(l_suppkey) - count(DISTINCT l_suppkey)) AS DOUBLE)
+           <= 0.15 * count(DISTINCT l_suppkey) AS supp_ok,
+         CAST(abs(approx_count_distinct(l_partkey) - count(DISTINCT l_partkey)) AS DOUBLE)
+           <= 0.15 * count(DISTINCT l_partkey) AS part_ok,
+         count(1) AS n_rows
+       FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
+    "q32_approx_percentiles" ->
+      """SELECT l_returnflag,
+         round(percentile(l_quantity, 0.5), 4) AS median_qty,
+         round(percentile(l_extendedprice, 0.9), 4) AS p90_price,
+         approx_percentile(l_quantity, 0.5, 10000)
+           BETWEEN percentile(l_quantity, 0.48) AND percentile(l_quantity, 0.52) AS median_ok,
+         approx_percentile(l_extendedprice, 0.9, 10000)
+           BETWEEN percentile(l_extendedprice, 0.88) AND percentile(l_extendedprice, 0.92) AS p90_ok,
+         count(1) AS n_rows
+       FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""
   )
 }

@@ -195,7 +195,12 @@ object Tables {
       else acc
     }
 
-  /** Register every table as a temp view so `spark.sql(...)` works too. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
+  /** Register every table as a temp view so `spark.sql(...)` works too,
+    * and the `graft_query` table function over the same `dir`
+    * ([[GraftExtensions.queryFunction]]); a second call rebinds both. */
+  def registerAll(spark: SparkSession, dir: String): Unit = {
     all.foreach(n => t(spark, dir, n).createOrReplaceTempView(n))
+    spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
+      "graft_query", GraftExtensions.queryFunction(spark, dir), "scala_udf")
+  }
 }

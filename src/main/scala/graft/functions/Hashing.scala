@@ -277,9 +277,8 @@ object Hashing {
   // ---- t25 Count-Min sketch geometry ------------------------------
 
   /** CMS shape: depth rows × 2^CmsLogW cells. Single-sourced into the
-    * generated replays (SparkEntry t25 oracle / SparkDialectTail) so
-    * the engine can never sketch at a different geometry than the
-    * oracle recounts. */
+    * generated t25 oracle replay (OracleSqlText) so the engine can never
+    * sketch at a different geometry than the oracle recounts. */
   val CmsDepth: Int = 3
   val CmsLogW: Int = 9
   val CmsWidth: Int = 1 << CmsLogW

@@ -34,10 +34,10 @@ object Similarity {
   /** s18 replay constants — single-sourced for the same reason as
     * [[DefaultBucketCap]]: the ingested/batch split id, the entry-set
     * size, and the per-node edge count (k = m in the insert) appear in
-    * [[annGraphInsert]]'s defaults AND in both dialects' generated SQL
-    * (OracleSqlSim.s18OracleSql, SparkDialectTail.s18Sql); deriving all
-    * three sites from here means changing a default can never desync
-    * the engine from its oracle replay. */
+    * [[annGraphInsert]]'s defaults AND in the generated oracle SQL
+    * (OracleSqlSim.s18OracleSql); deriving both sites from here means
+    * changing a default can never desync the engine from its oracle
+    * replay. */
   val S18SplitId: Long = 100
   val S18NEntries: Int = 4
   val GraphM: Int = 12
@@ -1348,8 +1348,8 @@ object Similarity {
           .otherwise(lit(0L))),
       lit(0L), (acc, x) => acc + x)
 
-  /** s26 shortlist size — single-sourced into both generated replays
-    * (OracleSqlSim.s26OracleSql / sparkSql) like [[S18NEntries]]. */
+  /** s26 shortlist size — single-sourced into the generated oracle
+    * replay (OracleSqlSim.s26OracleSql) like [[S18NEntries]]. */
   val S26NCand: Int = 20
 
   /** s26: binary (1-bit-per-dimension) sign-quantized ANN — Hamming

@@ -7,7 +7,9 @@ import org.apache.spark.sql.DataFrame
   * in the engine through `spark.sql(...)` over [[Tables.registerAll]]'s
   * views and yields frames IDENTICAL to the DataFrame API forms —
   * including the custom operators injected by [[GraftExtensions]]
-  * (`graft_dot` as a SQL function, TopKStrategy for the top-k plan). */
+  * (`graft_dot` as a SQL function, TopKStrategy for the top-k plan) and
+  * the `graft_query` table function that calls a registered operator
+  * from SQL. */
 class SqlParitySpec extends SparkSuite {
 
   Tables.registerAll(spark, sf)
@@ -78,6 +80,66 @@ class SqlParitySpec extends SparkSuite {
     val covered = SparkEntry.sparkSql.keySet ++ portable
     val missing = SparkEntry.queries.keySet -- covered
     assert(missing.isEmpty, s"queries without a SQL-text form: $missing")
+  }
+
+  /** The message of the error `spark.sql(sql)` raises while it
+    * analyzes `sql`, before any action. */
+  private def analysisError(sql: String): String =
+    intercept[IllegalArgumentException](spark.sql(sql)).getMessage
+
+  test("graft_query: an unknown name fails analysis and says it is not a registry key") {
+    val msg = analysisError("SELECT * FROM graft_query('q99_no_such_query')")
+    assert(msg.contains("graft_query") && msg.contains("'q99_no_such_query'") &&
+      msg.contains("not a key of SparkEntry.queries"), msg)
+  }
+
+  test("graft_query: a non-literal or non-string argument fails analysis") {
+    Seq("upper('q01_pricing_summary')", "42").foreach { arg =>
+      val msg = analysisError(s"SELECT * FROM graft_query($arg)")
+      assert(msg.contains("graft_query") && msg.contains(arg), msg)
+    }
+  }
+
+  test("graft_query: a number of arguments other than one fails analysis") {
+    Seq("", "'q01_pricing_summary', 'q13_events_tumbling'").foreach { args =>
+      val msg = analysisError(s"SELECT * FROM graft_query($args)")
+      assert(msg.contains("graft_query") && msg.contains(s"($args)"), msg)
+    }
+  }
+
+  test("graft_query is a relation: a join and aggregate over it equal the DataFrame composition") {
+    import org.apache.spark.sql.functions.{count, lit}
+    val viaSql = canon(spark.sql(
+      """SELECT cluster, count(*) AS n
+         FROM graft_query('d05_dup_clusters') JOIN documents USING (doc_id)
+         GROUP BY cluster"""))
+    val viaDf = canon(SparkEntry.queries("d05_dup_clusters")(spark, sf)
+      .join(Tables.t(spark, sf, "documents"), "doc_id")
+      .groupBy("cluster").agg(count(lit(1)).as("n")))
+    assert(viaSql.nonEmpty && viaSql == viaDf)
+  }
+
+  test("graft_query is a relation: a self-join of q31_topk_per_group resolves") {
+    val viaSql = canon(spark.sql(
+      """SELECT a.o_orderpriority, a.o_orderkey, b.o_orderkey AS peer_key
+         FROM graft_query('q31_topk_per_group') a
+         JOIN graft_query('q31_topk_per_group') b
+           ON a.o_orderpriority = b.o_orderpriority"""))
+    val q31 = SparkEntry.queries("q31_topk_per_group")(spark, sf)
+    val viaDf = canon(q31.as("a").join(q31.as("b"), "o_orderpriority")
+      .selectExpr("o_orderpriority", "a.o_orderkey", "b.o_orderkey AS peer_key"))
+    assert(viaSql.nonEmpty && viaSql == viaDf)
+  }
+
+  test("graft_query is bound to the directory of the last registerAll") {
+    val other = "/root/testdata/sf0.01"
+    try {
+      Tables.registerAll(spark, other)
+      val viaSql = canon(spark.sql("SELECT * FROM graft_query('q01_pricing_summary')"))
+      val viaDf = canon(SparkEntry.queries("q01_pricing_summary")(spark, other))
+      assert(viaSql.nonEmpty && viaSql == viaDf)
+      assert(viaSql != canon(SparkEntry.queries("q01_pricing_summary")(spark, sf)))
+    } finally Tables.registerAll(spark, sf)
   }
 
   test("graft_dot resolves in SQL text and matches the native expression") {
