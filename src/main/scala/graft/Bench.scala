@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * `parsed: null`.
   *
   * `SPARK_GRAFT_ONLY=x03,d0` runs only queries whose name starts with
-  * one of the comma-separated prefixes, and `SPARK_GRAFT_REPEAT=5`
+  * one of the comma-separated prefixes ([[SparkEntry.only]]), and `SPARK_GRAFT_REPEAT=5`
   * times each query N times reporting the MINIMUM. REPEAT defaults to
   * 2 (not 1): min-of-2 filters the sandbox's scheduler-contention
   * spikes that have repeatedly produced phantom 4× "regressions" in
@@ -148,12 +148,39 @@ object Bench {
     else None
   }
 
+  /** The `SPARK_GRAFT_REPEAT` value as a repeat count, 2 when unset. */
+  private[graft] def repeats(value: Option[String]): Int =
+    LocalSession.positiveEnv("SPARK_GRAFT_REPEAT", value, default = 2)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_results.json")
     val histPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY", "bench_history.jsonl"))
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
+    // Fit-INCLUSIVE variants of the pinned-serve ANN queries: the
+    // registered forms serve sf0.01-pinned fixtures (fit left the
+    // timed path in r8), so these keep the fit cost visible in the
+    // rotation. model/cells/rotation = None re-fits inline at the
+    // bench SF. Excluded from `value` (not driver-gated queries).
+    import org.apache.spark.sql.DataFrame
+    import graft.operators.{Pca, Similarity}
+    val fitVariants: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+      "s05_fit_ann_kmeans_ivf" ->
+        ((s: SparkSession, d: String) => Similarity.annKmeansIvf(s, d, model = None)),
+      "s09_fit_ann_pq" ->
+        ((s: SparkSession, d: String) => Similarity.annPq(s, d, model = None)),
+      "s10_fit_ann_ivfpq" ->
+        ((s: SparkSession, d: String) => Similarity.annIvfPq(s, d, model = None)),
+      "s12_fit_pca_project" ->
+        ((s: SparkSession, d: String) => Pca.project(s, d)),
+      "s13_fit_ann_opq" ->
+        ((s: SparkSession, d: String) =>
+          Similarity.annPqRotated(s, d, rotation = None, model = None)),
+      "s14_fit_semdedup" ->
+        ((s: SparkSession, d: String) =>
+          Similarity.semDedupClusters(s, d, cells = None)))
+    val only = SparkEntry.only(SparkEntry.queries.keys ++ fitVariants.map(_._1))
+    val repeat = repeats(sys.env.get("SPARK_GRAFT_REPEAT"))
     val spark = LocalSession()
     // Warm the session once (parquet reader init, codegen of common
     // stages) so the first timed query doesn't absorb ~5s of one-time
@@ -255,7 +282,6 @@ object Bench {
     // Outliers that survived the immediate re-run, held for the
     // end-of-suite adjudication post-pass: name -> (min-so-far, thr).
     val pending = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "2").toInt.max(1)
 
     def timeOnce(name: String,
                  fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
@@ -335,7 +361,7 @@ object Bench {
     }
 
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
+      .filter { case (name, _) => only(name) }
     val resultsM = scala.collection.mutable.LinkedHashMap(
       selected.map { case (name, fn) => name -> timeQuery(name, fn) }: _*)
 
@@ -393,30 +419,8 @@ object Bench {
     }
     val results = resultsM.toSeq
 
-    // Fit-INCLUSIVE variants of the pinned-serve ANN queries: the
-    // registered forms serve sf0.01-pinned fixtures (fit left the
-    // timed path in r8), so these keep the fit cost visible in the
-    // rotation. model/cells/rotation = None re-fits inline at the
-    // bench SF. Excluded from `value` (not driver-gated queries).
-    import org.apache.spark.sql.DataFrame
-    import graft.operators.{Pca, Similarity}
-    val fitVariants: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-      "s05_fit_ann_kmeans_ivf" ->
-        ((s: SparkSession, d: String) => Similarity.annKmeansIvf(s, d, model = None)),
-      "s09_fit_ann_pq" ->
-        ((s: SparkSession, d: String) => Similarity.annPq(s, d, model = None)),
-      "s10_fit_ann_ivfpq" ->
-        ((s: SparkSession, d: String) => Similarity.annIvfPq(s, d, model = None)),
-      "s12_fit_pca_project" ->
-        ((s: SparkSession, d: String) => Pca.project(s, d)),
-      "s13_fit_ann_opq" ->
-        ((s: SparkSession, d: String) =>
-          Similarity.annPqRotated(s, d, rotation = None, model = None)),
-      "s14_fit_semdedup" ->
-        ((s: SparkSession, d: String) =>
-          Similarity.semDedupClusters(s, d, cells = None)))
     val fitResults = fitVariants
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
+      .filter { case (name, _) => only(name) }
       .map { case (name, fn) => name -> timeQuery(name, fn) }
 
     val pinnedServe = Seq("s05_ann_kmeans_ivf", "s09_ann_pq", "s10_ann_ivfpq",

@@ -9,8 +9,20 @@ import org.apache.spark.sql.SparkSession
 object LocalSession {
 
   /** A main's session: `SPARK_GRAFT_CPUS` cores, 4 when unset. */
-  def apply(): SparkSession =
-    apply(sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(4))
+  def apply(): SparkSession = apply(cores(sys.env.get("SPARK_GRAFT_CPUS")))
+
+  /** The `SPARK_GRAFT_CPUS` value as a core count. */
+  private[graft] def cores(value: Option[String]): Int =
+    positiveEnv("SPARK_GRAFT_CPUS", value, default = 4)
+
+  /** A main's whole-number setting from environment variable `name`:
+    * `default` when unset; a value that is not a whole number of at
+    * least 1 fails naming the variable and the value. */
+  private[graft] def positiveEnv(name: String, value: Option[String], default: Int): Int =
+    value.fold(default) { v =>
+      v.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"$name must be a whole number of at least 1, got '$v'"))
+    }
 
   def apply(cores: Int): SparkSession = {
     val spark = SparkSession.builder()

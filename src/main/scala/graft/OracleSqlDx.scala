@@ -1470,7 +1470,7 @@ object OracleSqlDx {
 
   /** x24 Spark-dialect form — the same member composition as the
     * DuckDB replay, in the Spark spellings (md5 CAST AS STRING, the
-    * graft_shingles-backed x05 form). */
+    * x05 Spark-dialect form). */
   private[graft] lazy val x24SparkSql: String = {
     val thr = graft.operators.Sampling.X24ContaminationMin
     s"""WITH x05r AS (

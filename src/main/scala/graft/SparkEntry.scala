@@ -253,6 +253,25 @@ object SparkEntry {
       refit = Some(Pinned.s40Centroids))),
   )
 
+  /** The names a main runs under `SPARK_GRAFT_ONLY`, the one query
+    * selector of [[Bench]], [[Verify]] and `tools.ShuffleAudit`:
+    * comma-separated name prefixes, each trimmed (`x03,d0` selects x03
+    * and d01–d09; `s03` selects s03 and s03c). Unset, every name is
+    * selected. `names` are the names the main would run; a value that
+    * selects none of them fails naming the variable and the value. */
+  def only(names: Iterable[String],
+           value: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")): Set[String] =
+    value match {
+      case None => names.toSet
+      case Some(v) =>
+        val prefixes = v.split(",").map(_.trim).filter(_.nonEmpty)
+        val picked = names.filter(n => prefixes.exists(n.startsWith)).toSet
+        if (picked.isEmpty) throw new IllegalArgumentException(
+          s"SPARK_GRAFT_ONLY='$v' selects none of the ${names.size} query names " +
+            "(it takes comma-separated name prefixes, e.g. 'q01,d0')")
+        picked
+    }
+
   /** DuckDB-runnable oracle SQL, one per SQL-expressible query,
     * composed from the per-family objects. */
   def oracleSql: Map[String, String] =

@@ -238,22 +238,17 @@ object Hashing {
     out
   }
 
-  private[graft] val minhashBandKeysUdf = udf((h: Seq[Long]) => minhashBandKeys(h))
-  private[graft] val minhashMinimaUdf = udf((h: Seq[Long]) => minhashMinima(h))
-  private[graft] val bandKeysAtUdf =
+  private val minhashBandKeysUdf = udf((h: Seq[Long]) => minhashBandKeys(h))
+  private val minhashMinimaUdf = udf((h: Seq[Long]) => minhashMinima(h))
+  private val bandKeysAtUdf =
     udf((m: Seq[Long], bands: Int) => bandKeysAt(m, bands))
-  private[graft] val simhash64Udf = udf((h: Seq[Long]) => simhash64(h))
-  private[graft] val simhash128Udf = udf((h: Seq[Long]) => simhash128(h))
-  private[graft] val shingleHashesUdf = udf((t: String, n: Int) => shingleHashes(t, n))
+  private val simhash64Udf = udf((h: Seq[Long]) => simhash64(h))
+  private val simhash128Udf = udf((h: Seq[Long]) => simhash128(h))
+  private val shingleHashesUdf = udf((t: String, n: Int) => shingleHashes(t, n))
 
   /** Column form of [[shingleHashes]]. */
   def hashedShingles(text: Column, n: Int = 3): Column =
     shingleHashesUdf(text, org.apache.spark.sql.functions.lit(n))
-
-  /** Column-typed-n variant for the SQL FunctionRegistry builder
-    * (`graft_shingles(text, n)` — n arrives as an expression there). */
-  private[graft] def hashedShinglesCol(text: Column, n: Column): Column =
-    shingleHashesUdf(text, n)
 
   /** Column form of [[minhashBandKeys]]; input array<bigint>. */
   def minhashBands(shingleHashes: Column): Column = minhashBandKeysUdf(shingleHashes)
@@ -303,9 +298,9 @@ object Hashing {
     out
   }
 
-  private[graft] val fnv64Udf = udf((s: String) => fnv64(s))
-  private[graft] val cmsCellsUdf = udf((h: Long) => cmsCells(h))
-  private[graft] val windowHashesUdf = udf((t: String, w: Int) => windowHashes(t, w))
+  private val fnv64Udf = udf((s: String) => fnv64(s))
+  private val cmsCellsUdf = udf((h: Long) => cmsCells(h))
+  private val windowHashesUdf = udf((t: String, w: Int) => windowHashes(t, w))
 
   /** Column form of [[windowHashes]]. */
   def windowHashesCol(text: Column, w: Column): Column =

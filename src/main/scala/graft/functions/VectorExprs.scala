@@ -126,7 +126,7 @@ case class LowNibbleHistogram(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case BinaryType => TypeCheckResult.TypeCheckSuccess
     case dt => TypeCheckResult.TypeCheckFailure(
-      s"graft_low_nibble_hist requires a binary input, got ${dt.sql}")
+      s"lowNibbleHistogram requires a binary input, got ${dt.sql}")
   }
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)

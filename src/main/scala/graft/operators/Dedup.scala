@@ -1226,62 +1226,45 @@ object Dedup {
     * [[incrementalSimhash]] semantics with hamming over 128 bits and
     * 32-bit pigeonhole chunks (same ≤ 3 guarantee). */
   def incrementalSimhashWide(batchSig: DataFrame, storeSig: DataFrame,
-                             maxHamming: Int = 3): DataFrame = {
-    require(maxHamming <= 3,
-      s"maxHamming=$maxHamming exceeds the 4-chunk candidate guarantee (max 3)")
-    val b = batchSig.localCheckpoint(eager = false)
-    val st = storeSig.localCheckpoint(eager = false)
-    def chunks(df: DataFrame, as: String): DataFrame = df
-      .select(col("doc_id").as(as),
-        posexplode(chunkKeysWide(col("sig0"), col("sig1")))
-          .as(Seq("chunk", "key")))
-    val cand = chunks(b, "batch_id")
-      .join(chunks(st, "store_id"), Seq("chunk", "key"))
-      .select("batch_id", "store_id").distinct()
-    val verified = cand
-      .join(b.select(col("doc_id").as("batch_id"), col("sig0").as("b0"),
-        col("sig1").as("b1")), "batch_id")
-      .join(st.select(col("doc_id").as("store_id"), col("sig0").as("s0"),
-        col("sig1").as("s1")), "store_id")
-      .withColumn("hamming",
-        bit_count(col("b0").bitwiseXOR(col("s0"))) +
-          bit_count(col("b1").bitwiseXOR(col("s1"))))
-      .filter(col("hamming") <= maxHamming)
-    val w = Window.partitionBy("batch_id")
-      .orderBy(asc("hamming"), asc("store_id"))
-    verified
-      .withColumn("rk", row_number().over(w))
-      .withColumn("n_matches",
-        count(lit(1)).over(Window.partitionBy("batch_id")))
-      .filter(col("rk") === 1)
-      .select(col("batch_id").as("doc_id"),
-        col("store_id").as("best_match"), col("hamming"), col("n_matches"))
-      .orderBy("doc_id")
-  }
+                             maxHamming: Int = 3): DataFrame =
+    simhashProbe(batchSig, storeSig, Seq("sig0", "sig1"),
+      sigs => chunkKeysWide(sigs(0), sigs(1)), maxHamming)
 
   /** The probe half over pre-derived signature frames (doc_id, sig). */
   def incrementalSimhash(batchSig: DataFrame, storeSig: DataFrame): DataFrame =
     incrementalSimhash(batchSig, storeSig, 3)
 
   def incrementalSimhash(batchSig: DataFrame, storeSig: DataFrame,
-                         maxHamming: Int): DataFrame = {
+                         maxHamming: Int): DataFrame =
+    simhashProbe(batchSig, storeSig, Seq("sig"), sigs => chunkKeysOf(sigs.head),
+      maxHamming)
+
+  /** The one simhash probe over (doc_id, `sigCols`…) frames: batch and
+    * store docs sharing a pigeonhole chunk (`chunkKeys` of the
+    * signature columns) are candidates, hamming summed over the
+    * signature words verifies them, and each matched batch doc reports
+    * its best store match (hamming ASC, id ASC) and its match count. */
+  private def simhashProbe(batchSig: DataFrame, storeSig: DataFrame,
+                           sigCols: Seq[String], chunkKeys: Seq[Column] => Column,
+                           maxHamming: Int): DataFrame = {
     require(maxHamming <= 3,
       s"maxHamming=$maxHamming exceeds the 4-chunk candidate guarantee (max 3)")
     val b = batchSig.localCheckpoint(eager = false) // chunk probe + sig fetch
     val st = storeSig.localCheckpoint(eager = false)
     def chunks(df: DataFrame, as: String): DataFrame = df
       .select(col("doc_id").as(as),
-        posexplode(chunkKeysOf(col("sig"))).as(Seq("chunk", "key")))
+        posexplode(chunkKeys(sigCols.map(col))).as(Seq("chunk", "key")))
+    def sigs(df: DataFrame, as: String, side: String): DataFrame =
+      df.select(col("doc_id").as(as) +: sigCols.map(c => col(c).as(s"${c}_$side")): _*)
     val cand = chunks(b, "batch_id")
       .join(chunks(st, "store_id"), Seq("chunk", "key"))
       .select("batch_id", "store_id").distinct()
     val verified = cand
-      .join(b.select(col("doc_id").as("batch_id"), col("sig").as("sig_b")),
-        "batch_id")
-      .join(st.select(col("doc_id").as("store_id"), col("sig").as("sig_s")),
-        "store_id")
-      .withColumn("hamming",
-        bit_count(col("sig_b").bitwiseXOR(col("sig_s"))))
+      .join(sigs(b, "batch_id", "b"), "batch_id")
+      .join(sigs(st, "store_id", "s"), "store_id")
+      .withColumn("hamming", sigCols
+        .map(c => bit_count(col(s"${c}_b").bitwiseXOR(col(s"${c}_s"))))
+        .reduce(_ + _))
       .filter(col("hamming") <= maxHamming)
     val w = Window.partitionBy("batch_id")
       .orderBy(asc("hamming"), asc("store_id"))

@@ -155,7 +155,8 @@ object Similarity {
         round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6).as("cos"))
     val scored = half.unionByName(
       half.select(col("dst").as("src"), col("src").as("dst"), col("cos")))
-    beamSearch(all, topMGraph(scored, m), beam, hops, k, nQueries, nEntries)
+    beamSearch(all, topMGraph(scored, m).select("src", "dst"), beam, hops, k,
+      nQueries, nEntries)
   }
 
   /** Occupancy-targeted nPlanes dial for the LSH-built graph queries:
@@ -278,10 +279,6 @@ object Similarity {
     val all = emb(s, dir)
     val n = memoCount(dir)(t(s, dir, "embeddings").count())
     val nP = nPlanes.getOrElse(autoNPlanes(n))
-    def directed(cs: DataFrame): DataFrame = cs
-      .select(col("id_a").as("src"), col("id_b").as("dst"), col("cos"))
-      .unionByName(cs
-        .select(col("id_b").as("src"), col("id_a").as("dst"), col("cos")))
     val aSide = all.select(col("vec_id").as("id_a"), col("v").as("va"),
       col("nrm").as("na"))
     val bSide = all.select(col("vec_id").as("id_b"), col("v").as("vb"),
@@ -292,7 +289,7 @@ object Similarity {
     // only the refinement rounds re-read the candidates
     var cs = if (rounds > 0) pairs.localCheckpoint() else pairs
     for (_ <- 1 to rounds) {
-      val g = topMGraph(directed(cs), m)
+      val g = topMGraph(directed(cs), m).select("src", "dst")
       val nn = g.as("g1").join(g.as("g2"),
           col("g1.src") === col("g2.src") && col("g1.dst") < col("g2.dst"))
         .select(col("g1.dst").as("id_a"), col("g2.dst").as("id_b"))
@@ -306,8 +303,8 @@ object Similarity {
             .as("cos"))
       cs = cs.unionByName(fresh).localCheckpoint()
     }
-    beamSearch(all, topMGraph(directed(cs), m), autoBeam(n), autoHops(n),
-      k, nQueries, nEntries)
+    beamSearch(all, topMGraph(directed(cs), m).select("src", "dst"), autoBeam(n),
+      autoHops(n), k, nQueries, nEntries)
   }
 
   /** s18: incremental INSERT into the graph index — the lifecycle step
@@ -334,15 +331,15 @@ object Similarity {
                      m: Int = GraphM,
                      beam: Option[Int] = None, hops: Option[Int] = None,
                      nEntries: Int = S18NEntries,
-                     bucketCap: Int = DefaultBucketCap): DataFrame = {
-    val all = emb(s, dir)
-    insertSearch(s, dir,
-      all.filter(col("vec_id") < splitId)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"),
-          col("nrm").as("qn")),
-      maxQueries = splitId,
-      splitId, nTables, nPlanes, m, beam, hops, nEntries, bucketCap)
-  }
+                     bucketCap: Int = DefaultBucketCap): DataFrame =
+    insertSearch(s, dir, splitQueries(s, dir, splitId), maxQueries = splitId,
+      splitId, nTables, nPlanes, m, beam, hops, nEntries, bucketCap)._2
+
+  /** The batch side of the split corpus (vec_id < `splitId`) as
+    * (q_id, qv, qn) queries. */
+  private def splitQueries(s: SparkSession, dir: String, splitId: Long): DataFrame =
+    emb(s, dir).filter(col("vec_id") < splitId)
+      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
 
   /** The insert primitive over an EXPLICIT batch frame — the
     * foreachBatch-consumer form of [[annGraphInsert]] (see
@@ -362,31 +359,30 @@ object Similarity {
                            nEntries: Int = S18NEntries,
                            bucketCap: Int = DefaultBucketCap): DataFrame =
     insertSearch(s, dir, queries, maxQueries = Long.MaxValue,
-      splitId, nTables, nPlanes, m, beam, hops, nEntries, bucketCap)
+      splitId, nTables, nPlanes, m, beam, hops, nEntries, bucketCap)._2
 
-  /** [[annGraphInsertFrames]] for a query set the caller knows holds at
+  /** The insert family's one build and search (s18, s20 and the
+    * streaming insert): the scored top-m graph over the ingested corpus
+    * (vec_id ≥ `splitId`, the [[annGraphLsh]] build), and the `queries`
+    * beam-searched over it, for a query set the caller knows holds at
     * most `maxQueries` rows (Long.MaxValue: unknown). */
   private def insertSearch(s: SparkSession, dir: String, queries: DataFrame,
                            maxQueries: Long, splitId: Long, nTables: Int,
                            nPlanes: Option[Int], m: Int, beam: Option[Int],
                            hops: Option[Int], nEntries: Int,
-                           bucketCap: Int): DataFrame = {
+                           bucketCap: Int): (DataFrame, DataFrame) = {
     val all = emb(s, dir)
     val old = all.filter(col("vec_id") >= splitId)
     val n = memoCount(s"$dir#ge$splitId")(
       t(s, dir, "embeddings").filter(col("vec_id") >= splitId).count())
     val nP = nPlanes.getOrElse(autoNPlanes(n))
-    val undirected = lshPairsMulti(old, threshold = -2.0, nTables, nP,
-      dim = 64, bucketCap)
-    val scored = undirected
-      .select(col("id_a").as("src"), col("id_b").as("dst"), col("cos"))
-      .unionByName(undirected
-        .select(col("id_b").as("src"), col("id_a").as("dst"), col("cos")))
-    beamSearchFrames(all, topMGraph(scored, m), queries,
+    val graph = topMGraph(directed(lshPairsMulti(old, threshold = -2.0,
+      nTables, nP, dim = 64, bucketCap)), m)
+    (graph, beamSearchFrames(all, graph.select("src", "dst"), queries,
       old.filter(col("vec_id") < splitId + nEntries)
         .select(col("vec_id").as("n_id")),
       beam.getOrElse(autoBeam(n)), hops.getOrElse(autoHops(n)), k = m,
-      maxQueries)
+      maxQueries))
   }
 
   /** Adapt a raw (vec_id, embedding) frame — e.g. a streaming
@@ -428,26 +424,9 @@ object Similarity {
                           beam: Option[Int] = None, hops: Option[Int] = None,
                           nEntries: Int = S18NEntries,
                           bucketCap: Int = DefaultBucketCap): DataFrame = {
-    val all = emb(s, dir)
-    val old = all.filter(col("vec_id") >= splitId)
-    val n = memoCount(s"$dir#ge$splitId")(
-      t(s, dir, "embeddings").filter(col("vec_id") >= splitId).count())
-    val nP = nPlanes.getOrElse(autoNPlanes(n))
-    val undirected = lshPairsMulti(old, threshold = -2.0, nTables, nP,
-      dim = 64, bucketCap)
-    val scored = undirected
-      .select(col("id_a").as("src"), col("id_b").as("dst"), col("cos"))
-      .unionByName(undirected
-        .select(col("id_b").as("src"), col("id_a").as("dst"), col("cos")))
-    val oldGraph = topMGraphScored(scored, m)
-    val newEdges = beamSearchFrames(all, oldGraph.select("src", "dst"),
-      all.filter(col("vec_id") < splitId)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"),
-          col("nrm").as("qn")),
-      old.filter(col("vec_id") < splitId + nEntries)
-        .select(col("vec_id").as("n_id")),
-      beam.getOrElse(autoBeam(n)), hops.getOrElse(autoHops(n)), k = m,
-      maxQueries = splitId)
+    val (oldGraph, newEdges) = insertSearch(s, dir, splitQueries(s, dir, splitId),
+      maxQueries = splitId, splitId, nTables, nPlanes, m, beam, hops, nEntries,
+      bucketCap)
     val incoming = newEdges
       .select(col("n_id").as("src"), col("q_id").as("dst"), col("cos"))
     val affected = incoming.select("src").distinct()
@@ -460,34 +439,30 @@ object Similarity {
       .orderBy("n_id", "rk")
   }
 
-  /** Directed k-NN graph: each src's top-`m` candidates by
-    * (rounded cos DESC, dst ASC). `localCheckpoint`: every beam-search
-    * hop re-reads the graph, and nothing may re-run the (expensive)
-    * pair source per hop. */
-  private def topMGraph(scored: DataFrame, m: Int): DataFrame = {
-    // its OWN window + single checkpoint — routing through
-    // topMGraphScored would materialize the selection twice (a second
-    // checkpoint per build, measured +2.7 s on s17 at sf0.1 in r17)
-    val wG = Window.partitionBy("src").orderBy(desc("cos"), asc("dst"))
-    scored.withColumn("rk", row_number().over(wG))
-      .filter(col("rk") <= m)
-      .select("src", "dst")
-      .localCheckpoint()
-  }
+  /** Mirror an undirected (id_a, id_b, cos) pair frame into directed
+    * (src, dst, cos) edges. */
+  private def directed(pairs: DataFrame): DataFrame = pairs
+    .select(col("id_a").as("src"), col("id_b").as("dst"), col("cos"))
+    .unionByName(pairs
+      .select(col("id_b").as("src"), col("id_a").as("dst"), col("cos")))
 
-  /** [[topMGraph]] keeping the edge score — the insert-update path
-    * (s20) re-ranks neighbor lists, so it needs the cos the search
-    * graph drops. Checkpointed because every beam-search hop re-reads
-    * the graph and nothing may re-run the (expensive) pair source per
-    * hop. Deliberately the row_number WINDOW, not TopKPerGroup: the
-    * group count here is the CORPUS (every node selects top-m), so
+  /** Directed k-NN graph (src, dst, cos): each src's top-`m` candidates
+    * by (rounded cos DESC, dst ASC). The search callers select
+    * (src, dst); the insert-update path (s20) re-ranks neighbor lists
+    * by the kept cos. Checkpointed ONCE, here: every beam-search hop
+    * re-reads the graph and nothing may re-run the (expensive) pair
+    * source per hop, and a second checkpoint of a projection of it
+    * cost +2.7 s per build on s17 at sf0.1 (r17) — select after this
+    * call, never checkpoint again. Deliberately the row_number WINDOW,
+    * not TopKPerGroup: the group count here is the CORPUS (every node
+    * selects top-m), so
     * per-partition rows-per-group ≈ occupancy·tables/partitions ≈ 3 —
     * below the heap cap m=12, and the map-side heaps prune nothing
     * while paying their overhead (measured r17 at sf10: 36.3 s via
     * TopKPerGroup vs 18.3 s via the window on the identical build).
     * TopKPerGroup wins when k·groups ≪ partition rows (q31/t10/x09's
     * regime), not here. */
-  private def topMGraphScored(scored: DataFrame, m: Int): DataFrame = {
+  private def topMGraph(scored: DataFrame, m: Int): DataFrame = {
     val wG = Window.partitionBy("src").orderBy(desc("cos"), asc("dst"))
     scored.withColumn("rk", row_number().over(wG))
       .filter(col("rk") <= m)

@@ -685,10 +685,9 @@ object TextOps {
   }
 
   // the full encode kernel (applyMergesLocal) with the merge list as
-  // two parallel array columns — the SQL-registry face of BPE encode
-  // (`graft_bpe_apply`), so the t13/t14 SQL-text forms run the SAME
-  // sequential kernel as the DataFrame path
-  private[graft] val applyMergesUdf = udf { (word: String, lefts: Seq[String], rights: Seq[String]) =>
+  // two parallel array columns — the per-word column form of BPE
+  // encode, the SAME sequential kernel as the per-document path
+  private val applyMergesUdf = udf { (word: String, lefts: Seq[String], rights: Seq[String]) =>
     applyMergesLocal(word, lefts.zip(rights))
   }
 
@@ -883,7 +882,7 @@ object TextOps {
     out.reverse.toSeq
   }
 
-  private[graft] val unigramSegmentUdf =
+  private val unigramSegmentUdf =
     udf { (w: String, pieces: Seq[String], scores: Seq[Double]) =>
       unigramViterbiLocal(w, pieces, scores)
     }

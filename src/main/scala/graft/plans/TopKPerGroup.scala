@@ -119,8 +119,8 @@ case class TopKPerGroupExec(k: Int, groupExprs: Seq[Expression],
     val groups = groupExprs
     val order = sortOrder
     if (partial) {
-      val maxGroups = conf.getConfString(
-        "spark.graft.topk.maxPartialGroups", "65536").toInt
+      val maxGroups = TopKPerGroup.maxPartialGroups(conf.getConfString(
+        TopKPerGroup.MaxPartialGroupsKey, "65536"))
       child.execute().mapPartitions { rows =>
         // UnsafeRow keys give value-based equals/hashCode for the map;
         // heap entries stay plain InternalRow — no assumption that the
@@ -216,6 +216,15 @@ case class TopKPerGroupExec(k: Int, groupExprs: Seq[Expression],
 }
 
 object TopKPerGroup {
+
+  private[plans] val MaxPartialGroupsKey = "spark.graft.topk.maxPartialGroups"
+
+  /** The partial pass's heap-map cap from its conf value; a value that
+    * is not a non-negative whole number fails naming the key and the
+    * value. */
+  private[plans] def maxPartialGroups(value: String): Int =
+    value.trim.toIntOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+      s"$MaxPartialGroupsKey must be a non-negative whole number of groups, got '$value'"))
 
   /** Install [[TopKStrategy]] on a running session (idempotent). */
   def register(spark: SparkSession): Unit =

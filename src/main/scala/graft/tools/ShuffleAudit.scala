@@ -22,7 +22,7 @@ import graft.SparkEntry
   * already memory-marginal and would OOM-thrash at 100×.
   *
   * Usage: runMain graft.tools.ShuffleAudit [sfDir] [outJson]
-  *   env SPARK_GRAFT_ONLY=prefix,prefix — the Verify filter grammar.
+  *   env SPARK_GRAFT_ONLY=prefix,prefix — the [[SparkEntry.only]] selector.
   * Output: one JSON object per query on stdout (sorted by
   * shuffle_bytes desc) + the full map written to outJson
   * (default shuffle_audit.json).
@@ -115,11 +115,9 @@ object ShuffleAudit {
       f"${Runtime.getRuntime.maxMemory / (1024.0 * 1024 * 1024)}%.1f GiB " +
       "(set via sbt -mem / JAVA_OPTS, NOT spark.driver.memory)")
 
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(_.exists(p => name == p || name.startsWith(p + "_")))
-    }.toSeq.sortBy(_._1)
+    val only = SparkEntry.only(SparkEntry.queries.keys)
+    val selected = SparkEntry.queries.filter { case (name, _) => only(name) }
+      .toSeq.sortBy(_._1)
 
     val rows = selected.flatMap { case (name, fn) =>
       try {

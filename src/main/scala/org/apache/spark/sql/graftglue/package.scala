@@ -14,15 +14,6 @@ package object graftglue {
   def columnOf(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expressionOf(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** EAGERLY convert a Column built via the public functions API into
-    * a real Catalyst expression tree. `expressionOf` defers conversion
-    * in a lazy `ColumnNodeExpression` wrapper, which the analyzer
-    * never unwraps when the expression is spliced into a parsed plan
-    * by a FunctionRegistry builder — codegen then fails with
-    * "Cannot generate code for columnnodeexpression". */
-  def eagerExpressionOf(c: Column): Expression =
-    classic.ColumnNodeToExpressionConverter(c.node)
-
   /** Lower a `udf(...)`-built UserDefinedFunction onto expression
     * children as a real `ScalaUDF` — what the FunctionRegistry
     * builders need. (`expressionOf` on a udf-applied Column yields a

@@ -130,6 +130,26 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.driftNote(best = 0.25, prev = 0.0).isEmpty,
       "no usable median -> nothing to compare")
   }
+
+  test("SPARK_GRAFT_ONLY=s03 selects both s03 entries") {
+    assert(SparkEntry.only(SparkEntry.queries.keys, Some("s03")) ==
+      Set("s03_lsh_pairs", "s03c_lsh_pairs_capped"))
+  }
+
+  test("SPARK_GRAFT_ONLY prefixes are trimmed") {
+    assert(SparkEntry.only(SparkEntry.queries.keys, Some(" q01 , d05")) ==
+      Set("q01_pricing_summary", "d05_dup_clusters"))
+    assert(SparkEntry.only(SparkEntry.queries.keys, None) == SparkEntry.queries.keySet)
+  }
+
+  test("a SPARK_GRAFT_ONLY value that selects no query fails naming the variable and the value") {
+    for (bad <- Seq("zz9", "q01_pricing_summaryx", " , ", "")) {
+      val e = intercept[IllegalArgumentException](
+        SparkEntry.only(SparkEntry.queries.keys, Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_ONLY") && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
+    }
+  }
 }
 
 /** Proves the r15 bench drive is non-prunable: `.count()` lets

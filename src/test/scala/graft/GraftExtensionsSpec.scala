@@ -63,4 +63,11 @@ class GraftExtensionsSpec extends SparkSuite {
     assert(names.distinct == names)
     assert(strategies.toSeq == Seq(TopKStrategy))
   }
+
+  test("the registered SQL functions are exactly the graft functions SparkEntry.sparkSql calls") {
+    val called = SparkEntry.sparkSql.values
+      .flatMap("""graft_[a-z0-9_]+(?=\()""".r.findAllIn(_))
+      .toSet - "graft_query"
+    assert(called == names.toSet)
+  }
 }

@@ -24,6 +24,32 @@ class HardeningSpec extends SparkSuite {
     finally spark.conf.unset(key)
   }
 
+  test("SPARK_GRAFT_CPUS and SPARK_GRAFT_REPEAT fail naming the variable and the value below 1 or unparseable") {
+    for ((name, parse) <- Seq[(String, Option[String] => Int)](
+           "SPARK_GRAFT_CPUS" -> LocalSession.cores, "SPARK_GRAFT_REPEAT" -> Bench.repeats);
+         bad <- Seq("abc", "0", "-2", "1.5", "")) {
+      val e = intercept[IllegalArgumentException](parse(Some(bad)))
+      assert(!e.isInstanceOf[NumberFormatException], e)
+      assert(e.getMessage.contains(name) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+    assert(LocalSession.cores(None) == 4 && LocalSession.cores(Some(" 8 ")) == 8)
+    assert(Bench.repeats(None) == 2 && Bench.repeats(Some("5")) == 5)
+  }
+
+  test("a malformed spark.graft.topk.maxPartialGroups fails the query naming the key and the value") {
+    val key = "spark.graft.topk.maxPartialGroups"
+    val rows = Seq(("a", 1), ("a", 2), ("b", 3)).toDF("g", "v")
+    for (bad <- Seq("abc", "-1", "")) {
+      spark.conf.set(key, bad)
+      try {
+        val e = intercept[IllegalArgumentException](
+          graft.plans.TopKPerGroup.topKPerGroup(rows, Seq("g"), Seq("v" -> true), 1).collect())
+        assert(!e.isInstanceOf[NumberFormatException], e)
+        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+      } finally spark.conf.unset(key)
+    }
+  }
+
   test("per-document encode counts tokenize like split(trim(text)): only ' ' is trimmed") {
     val docs = Seq((1L, "\tlower newer\n"), (2L, "  low  est "), (3L, "\r\nwidest \t"),
       (4L, "newest"), (5L, ""))
