@@ -4,6 +4,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.graftglue.{columnOf, expressionOf, scalaUdfOf}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -17,7 +18,9 @@ import graft.functions.{DotProduct, VectorExprs}
   * scalar functions ([[sqlFunctions]]). This is the reference's
   * delegated-SQL seam (README.md:2 hands its analytics to BigQuery as
   * SQL strings) done natively; `GraftExtensionsSpec` pins the function
-  * list to the names `SparkEntry.sparkSql` calls.
+  * list to the names `SparkEntry.sparkSql` calls. Two planner
+  * [[GraftExtensions.strategies]] ride along: top-k per group, and
+  * small global sorts in one partition.
   *
   * Activate with:
   * {{{
@@ -34,13 +37,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo(classOf[DotProduct].getName, name),
         builder))
     }
-    // plans the custom top-k-per-group logical node (partial + final
-    // bounded heaps around a hash exchange) — see graft.plans.TopKPerGroup
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    GraftExtensions.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
   }
 }
 
 object GraftExtensions {
+  /** The planner strategies graft adds: [[graft.plans.TopKStrategy]]
+    * plans the custom top-k-per-group node (partial and final bounded
+    * heaps around a hash exchange), and [[graft.plans.SmallSort]] plans
+    * a global sort of an input AQE would coalesce into one partition
+    * in that one partition, without the range sampler's job. */
+  private[graft] val strategies: Seq[SparkStrategy] =
+    Seq(graft.plans.TopKStrategy, graft.plans.SmallSort)
+
   private[graft] val dotBuilder: Seq[Expression] => Expression = children => {
     require(children.length == 2, "graft_dot(arrayA, arrayB) takes 2 arguments")
     // Cast to array<double> so SQL callers can pass array<float>/array<int>
@@ -94,15 +103,16 @@ object GraftExtensions {
 
   /** Attach graft to an already-running session (the extensions path
     * only applies when the session is first built): register the same
-    * [[sqlFunctions]] the extension class injects, install the
-    * [[graft.plans.TopKStrategy]] planner strategy, and route `file://`
+    * [[sqlFunctions]] the extension class injects, install the planner
+    * [[strategies]] it injects, and route `file://`
     * I/O through the fork-free [[graft.io.LocalFs]]. [[LocalSession]]
     * calls it for every main and the spec suite. Idempotent. */
   def register(spark: SparkSession): Unit = {
     sqlFunctions.foreach { case (name, builder) =>
       org.apache.spark.sql.graftglue.registerFunction(spark, name, builder)
     }
-    graft.plans.TopKPerGroup.register(spark)
+    val installed = spark.experimental.extraStrategies
+    spark.experimental.extraStrategies = installed ++ strategies.filterNot(installed.contains)
     graft.io.LocalFs.install(spark.sparkContext.hadoopConfiguration)
   }
 }

@@ -684,17 +684,6 @@ object TextOps {
     out.toSeq
   }
 
-  // the full encode kernel (applyMergesLocal) with the merge list as
-  // two parallel array columns — the per-word column form of BPE
-  // encode, the SAME sequential kernel as the per-document path
-  private val applyMergesUdf = udf { (word: String, lefts: Seq[String], rights: Seq[String]) =>
-    applyMergesLocal(word, lefts.zip(rights))
-  }
-
-  private[graft] def applyMergesCol(word: Column, lefts: Column,
-                                    rights: Column): Column =
-    applyMergesUdf(word, lefts, rights)
-
   /** t13: byte-pair-encoding merge training (Sennrich et al., "Neural
     * Machine Translation of Rare Words with Subword Units", ACL 2016) —
     * tokenizer induction as a distributed job. The corpus collapses to
@@ -1055,7 +1044,7 @@ object TextOps {
     * training round, folded over every merge in rank order, so
     * encoding a training-corpus word reproduces exactly the symbols
     * the training loop left it with. */
-  private def applyMergesLocal(word: String,
+  private[graft] def applyMergesLocal(word: String,
                                merges: Seq[(String, String)]): Seq[String] = {
     var syms: Seq[String] =
       word.toCharArray.map(_.toString).toSeq :+ "</w>"

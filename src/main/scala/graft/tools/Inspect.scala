@@ -6,13 +6,17 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.graftglue.{isMapStage, scopesOf}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.{Bench, LocalSession, SparkEntry}
 
 /** Look inside registered queries. For each named query: its rows, one
   * line per Spark job that building and driving it ran (duration,
-  * stages, tasks), and the `explain("formatted")` plan AQE finalized
+  * stages, tasks, and its last stage's kind and RDD operation scopes:
+  * `map` for a shuffle-map stage, `result` otherwise; a `result` stage
+  * whose last scope is `Exchange` is a range partitioner's sampling
+  * job), and the `explain("formatted")` plan AQE finalized
   * during the drive. The query is driven once with [[Bench.drive]], the
   * non-prunable noop sink, so the job table and the plan are those of
   * the cost `Bench` times; timing itself stays with `Bench`
@@ -23,14 +27,18 @@ import graft.{Bench, LocalSession, SparkEntry}
   */
 object Inspect {
 
-  private final case class Job(id: Int, start: Long, stages: Int, tasks: Int) {
+  private final case class Job(id: Int, start: Long, stages: Int, tasks: Int,
+                               kind: String, scopes: Seq[String]) {
     @volatile var end: Long = start
   }
 
   private final class Jobs extends SparkListener {
     val jobs = new ConcurrentHashMap[Int, Job]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      jobs.put(e.jobId, Job(e.jobId, e.time, e.stageInfos.size, e.stageInfos.map(_.numTasks).sum))
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val last = e.stageInfos.maxBy(_.stageId)
+      jobs.put(e.jobId, Job(e.jobId, e.time, e.stageInfos.size, e.stageInfos.map(_.numTasks).sum,
+        if (isMapStage(last)) "map" else "result", scopesOf(last)))
+    }
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
       Option(jobs.get(e.jobId)).foreach(_.end = e.time)
   }
@@ -65,7 +73,8 @@ object Inspect {
       val js = jobs.jobs.values.asScala.toSeq.sortBy(_.id)
       println(f"wall=$wall%.2fs jobs=${js.size} jobSum=${js.map(j => j.end - j.start).sum / 1e3}%.2fs")
       js.foreach { j =>
-        println(f"  job ${j.id}%4d ${(j.end - j.start) / 1e3}%7.2fs stages=${j.stages}%3d tasks=${j.tasks}%5d")
+        println(f"  job ${j.id}%4d ${(j.end - j.start) / 1e3}%7.2fs stages=${j.stages}%3d " +
+          f"tasks=${j.tasks}%5d ${j.kind}%6s: ${j.scopes.mkString(", ")}")
       }
       println(last.qe.fold("(no SQL execution)")(_.explainString(FormattedMode)))
     }

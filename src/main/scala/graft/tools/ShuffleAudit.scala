@@ -106,6 +106,10 @@ object ShuffleAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val outPath = if (args.length > 1) args(1) else "shuffle_audit.json"
+    // a SPARK_GRAFT_ONLY that selects no query fails before Spark starts
+    val only = SparkEntry.only(SparkEntry.queries.keys)
+    val selected = SparkEntry.queries.filter { case (name, _) => only(name) }
+      .toSeq.sortBy(_._1)
     val spark = graft.LocalSession()
     // spark.driver.memory is inert in local mode (the JVM is already
     // up — r15 ADVICE); the heap must come from sbt -mem / JAVA_OPTS.
@@ -114,10 +118,6 @@ object ShuffleAudit {
     System.err.println(f"shuffle_audit: driver max heap = " +
       f"${Runtime.getRuntime.maxMemory / (1024.0 * 1024 * 1024)}%.1f GiB " +
       "(set via sbt -mem / JAVA_OPTS, NOT spark.driver.memory)")
-
-    val only = SparkEntry.only(SparkEntry.queries.keys)
-    val selected = SparkEntry.queries.filter { case (name, _) => only(name) }
-      .toSeq.sortBy(_._1)
 
     val rows = selected.flatMap { case (name, fn) =>
       try {

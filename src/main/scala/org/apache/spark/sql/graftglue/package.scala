@@ -52,4 +52,17 @@ package object graftglue {
     * query completes, and the bus posts asynchronously. */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The RDD operation scopes of a stage's RDDs in RDD order, a run of
+    * equal names kept once (`RDDOperationScope` is `private[spark]`):
+    * the plan nodes whose RDDs the stage computes, such as `Exchange`,
+    * `WholeStageCodegen (3)` or `checkpoint`. */
+  def scopesOf(stage: org.apache.spark.scheduler.StageInfo): Seq[String] =
+    stage.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name))
+      .foldRight(List.empty[String]) { (s, acc) => if (acc.headOption.contains(s)) acc else s :: acc }
+
+  /** Whether a stage is a shuffle-map stage rather than a result stage
+    * (`StageInfo.shuffleDepId` is `private[spark]`). */
+  def isMapStage(stage: org.apache.spark.scheduler.StageInfo): Boolean =
+    stage.shuffleDepId.isDefined
 }

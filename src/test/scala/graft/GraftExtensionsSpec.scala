@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.execution.SparkStrategy
 
 import graft.io.{NioLocalFileSystem, NioLocalFs}
-import graft.plans.TopKStrategy
+import graft.plans.{SmallSort, TopKStrategy}
 
 /** The one attach call: a [[LocalSession]] carries every graft SQL
   * function, the top-k planner strategy and the fork-free `file://`,
@@ -36,7 +36,8 @@ class GraftExtensionsSpec extends SparkSuite {
     val registry = spark.sessionState.functionRegistry
     val missing = names.filterNot(n => registry.functionExists(FunctionIdentifier(n)))
     assert(missing.isEmpty, s"not registered: $missing")
-    assert(spark.experimental.extraStrategies.count(_ == TopKStrategy) == 1)
+    for (s <- Seq(TopKStrategy, SmallSort))
+      assert(spark.experimental.extraStrategies.count(_ == s) == 1, s)
     val root = URI.create("file:///")
     assert(FileSystem.get(root, spark.sparkContext.hadoopConfiguration).isInstanceOf[NioLocalFileSystem])
     assert(FileContext.getFileContext(root, spark.sessionState.newHadoopConf())
@@ -61,7 +62,7 @@ class GraftExtensionsSpec extends SparkSuite {
     })
     assert(injected.toSeq == names)
     assert(names.distinct == names)
-    assert(strategies.toSeq == Seq(TopKStrategy))
+    assert(strategies.toSeq == Seq(TopKStrategy, SmallSort))
   }
 
   test("the registered SQL functions are exactly the graft functions SparkEntry.sparkSql calls") {

@@ -54,14 +54,14 @@ class HardeningSpec extends SparkSuite {
     val docs = Seq((1L, "\tlower newer\n"), (2L, "  low  est "), (3L, "\r\nwidest \t"),
       (4L, "newest"), (5L, ""))
       .toDF("doc_id", "text")
-    val (lefts, rights) = TextOps.pinnedMerges.unzip
-    // the exploded column form the per-document kernel replaced
+    // the exploded column form the per-document kernel replaced, with
+    // the same BPE kernel applied per word
+    val merges = TextOps.pinnedMerges
+    val bpeTokens = udf((w: String) => TextOps.applyMergesLocal(w, merges).length.toLong)
     val want = docs
       .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("w"))
       .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_words"),
-        sum(size(TextOps.applyMergesCol(col("w"), typedLit(lefts), typedLit(rights))))
-          .cast("long").as("n_bpe_tokens"))
+      .agg(count(lit(1)).as("n_words"), sum(bpeTokens(col("w"))).cast("long").as("n_bpe_tokens"))
       .orderBy("doc_id").as[(Long, Long, Long)].collect().toSeq
     assert(want.head == ((1L, 4L, want.head._3)), "a leading \\t and a trailing \\n are tokens")
 

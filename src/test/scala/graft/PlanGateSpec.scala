@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, CartesianProductExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Sampling, Similarity, Warehouse}
-import graft.plans.TopKPerGroupExec
+import graft.plans.{OnePartitionExec, TopKPerGroupExec}
 
 /** Executable plan gates for the scale-critical shapes the r8 PLANS.md
   * audit verified by eye — so AQE/stats drift at bigger SFs is caught
@@ -333,7 +333,9 @@ class PlanGateSpec extends SparkSuite {
     // explode → distinct → join-back shape (one distinct shuffle + a
     // corpus-sized join per invocation) must NOT come back. The only
     // exchanges allowed are the unsplittable-input fan-out and the
-    // presentation sort's range partitioning.
+    // presentation sort's: its range partitioning or, for an input
+    // small enough for graft.plans.SmallSort, the one-partition
+    // exchange right under its OnePartitionExec.
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, RoundRobinPartitioning}
     for ((name, df) <- Seq(
@@ -345,9 +347,16 @@ class PlanGateSpec extends SparkSuite {
              _: CartesianProductExec => true
         case _ => false
       }, s"$name encode grew a join back")
+      def stageless(p: SparkPlan): SparkPlan = p match {
+        case q: QueryStageExec => stageless(q.plan)
+        case r: AQEShuffleReadExec => stageless(r.child)
+        case _ => p
+      }
+      val onePartitionInputs = plan.collect { case o: OnePartitionExec => stageless(o.child) }
       val badExchange = plan.collect { case e: ShuffleExchangeLike => e }
         .filterNot(e => e.outputPartitioning.isInstanceOf[RangePartitioning] ||
-          e.outputPartitioning.isInstanceOf[RoundRobinPartitioning])
+          e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] ||
+          onePartitionInputs.exists(_ eq e))
       assert(badExchange.isEmpty,
         s"$name encode shuffles corpus rows pre-sort: $badExchange")
     }

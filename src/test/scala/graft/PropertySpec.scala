@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
@@ -266,5 +268,51 @@ class PropertySpec extends AnyFunSuite {
     val (loop, loopRounds) = ccLabels(ccUnion, n - 1)
     assert(loopRounds > 0, s"bound ${n - 1} on $n rows took the driver path")
     assertLabels(loop, ccUnion, "distributed loop")
+  }
+
+  // ---- small global sorts ----
+
+  /** 40 rows of sort keys Spark orders specially: nulls, NaN, ±0.0 and
+    * the infinities, and strings whose UTF-8 byte order differs from
+    * their UTF-16 order (accents, a combining mark, CJK, a fullwidth
+    * letter, an astral code point). Few distinct values, so ties are
+    * common. */
+  private val sortKeysGen: Gen[List[(Option[Double], Option[String])]] = Gen.listOfN(40, Gen.zip(
+    Gen.frequency(1 -> Gen.const(None), 6 -> Gen.oneOf(Double.NaN, -0.0, 0.0, 1.5, -1.5,
+      Double.PositiveInfinity, Double.NegativeInfinity).map(Option(_))),
+    Gen.frequency(1 -> Gen.const(None), 6 -> Gen.oneOf("", "a", "A", "\u00e9", "e\u0301",
+      "\u65e5\u672c", "\uff21", "\ud83d\ude00", "z").map(Option(_)))))
+
+  /** One or both key columns in either order, each ascending or
+    * descending with nulls first or last. */
+  private val sortOrderGen: Gen[Seq[Column]] = for {
+    keys <- Gen.oneOf(Seq("d"), Seq("s"), Seq("d", "s"), Seq("s", "d"))
+    ways <- Gen.listOfN(keys.size, Gen.oneOf(Seq[Column => Column](
+      _.asc_nulls_first, _.asc_nulls_last, _.desc_nulls_first, _.desc_nulls_last)))
+  } yield keys.zip(ways).map { case (k, way) => way(col(k)) }
+
+  test("small-sort law: on adversarial keys, the driver sort and the one-partition sort " +
+       "return the range plan's order") {
+    import spark.implicits._
+    val cases = samples(Gen.zip(sortKeysGen, sortOrderGen), 10)
+    val keys = cases.flatMap(_._1)
+    assert(keys.exists(_._1.isEmpty) && keys.exists(_._1.exists(_.isNaN)) &&
+      keys.exists(_._1.exists(d => d == 0.0 && 1 / d < 0)), "no null, NaN or -0.0 sampled")
+    cases.foreach { case (rows, order) =>
+      // a unique tiebreak makes the order total
+      val data = rows.zipWithIndex.map { case ((d, str), id) => (d, str, id.toLong) }
+        .toDF("d", "s", "id")
+      for ((path, input) <- Seq("driver" -> data, "one partition" -> data.repartition(3))) {
+        def sorted() = input.orderBy(order :+ col("id"): _*)
+        val df = sorted()
+        // Row.toString keeps -0.0 and NaN apart from 0.0 and each other
+        val got = df.collect().map(_.toString).toSeq
+        val want = SparkSuite.withRangeSorts(sorted().collect().map(_.toString).toSeq)
+        assert(got == want, s"$path sort by $order")
+        val plan = df.queryExecution.executedPlan
+        assert(if (path == "driver") plan.isInstanceOf[LocalTableScanExec]
+               else plan.toString.contains("OnePartition"), s"$path plan:\n$plan")
+      }
+    }
   }
 }
